@@ -561,8 +561,9 @@ def pointer_jump_components(
     minimum id" (stars + label equality across every edge), i.e. the
     same output contract as ``star_connected_components``; singletons
     keep their own id. Requires integral non-NULL node ids (the exact
-    decimal label-sum is the convergence test); ``connected_components``
-    routes string ids to the star-contraction twin instead.
+    decimal label-sum is the convergence test) and raises on string
+    ids; ``connected_components`` does not re-route them, so string-id
+    callers use its default ``algo="star"``.
 
     Why this replaces star contraction on the hot paths (r15, guide
     §2.2/§2.4): star contraction re-shuffles the whole EDGE multiset

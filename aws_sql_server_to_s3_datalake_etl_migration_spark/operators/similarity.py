@@ -328,41 +328,41 @@ def semantic_dedup(
     # is ~1.2 s warm at sf0.1). Released after the components labels
     # materialize inside connected_components below.
     slim = assigned.select(id_col, vec_col, "_cell").persist()
-    counts = slim.groupBy("_cell").agg(F.count(F.lit(1)).alias("_n"))
-    bounded = slim.join(
-        counts.where(F.col("_n") <= max_cell_size).select("_cell"), "_cell"
-    )
-    # norms hoisted to the join inputs (r15, guide §1.2): one fold
-    # per row instead of two per candidate pair; value bit-identical
-    # (see pairwise_cosine)
-    a = bounded.select(
-        "_cell",
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    b = bounded.select(
-        "_cell",
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
-    pairs = (
-        a.join(b, "_cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            pairwise_cosine(
-                F.col("_va"),
-                F.col("_vb"),
-                a_norm=F.col("_na"),
-                b_norm=F.col("_nb"),
-            ),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b")
-    )
     try:
+        counts = slim.groupBy("_cell").agg(F.count(F.lit(1)).alias("_n"))
+        bounded = slim.join(
+            counts.where(F.col("_n") <= max_cell_size).select("_cell"), "_cell"
+        )
+        # norms hoisted to the join inputs (r15, guide §1.2): one fold
+        # per row instead of two per candidate pair; value bit-identical
+        # (see pairwise_cosine)
+        a = bounded.select(
+            "_cell",
+            F.col(id_col).alias("id_a"),
+            F.col(vec_col).alias("_va"),
+            _norm(F.col(vec_col)).alias("_na"),
+        )
+        b = bounded.select(
+            "_cell",
+            F.col(id_col).alias("id_b"),
+            F.col(vec_col).alias("_vb"),
+            _norm(F.col(vec_col)).alias("_nb"),
+        )
+        pairs = (
+            a.join(b, "_cell")
+            .where(F.col("id_a") < F.col("id_b"))
+            .withColumn(
+                "cosine",
+                pairwise_cosine(
+                    F.col("_va"),
+                    F.col("_vb"),
+                    a_norm=F.col("_na"),
+                    b_norm=F.col("_nb"),
+                ),
+            )
+            .where(F.col("cosine") >= threshold)
+            .select("id_a", "id_b")
+        )
         # connected_components materializes its returned labels
         # (persist + per-round actions) before returning, so slim's
         # cache has served every reader by the time we release it

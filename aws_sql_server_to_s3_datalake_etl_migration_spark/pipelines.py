@@ -16,6 +16,7 @@ wrote so the recon layer (plans/recon.py) is fed without re-scanning.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +25,8 @@ from pyspark.sql import functions as F
 from .operators.clean import sanitize_columns
 from .sources.readers import read_csv
 from .sources.writers import write_parquet
+
+_VIEWS_LOCK = threading.Lock()
 
 
 def ingest_csv_to_lake(
@@ -58,17 +61,23 @@ def ingest_query_to_lake(
 
     ``sources`` maps view name → DataFrame (the reference hard-wired two
     JDBC reads; any reader output works here).
+
+    Temp views are session-global, so two concurrent jobs registering
+    the same view name would read each other's data. The views live
+    only under ``_VIEWS_LOCK``, until the query is analyzed (the
+    analyzed plan no longer needs the names, as in
+    ``readers._run_sql_over_view``); the write runs outside it.
     """
-    for view, df in sources.items():
-        df.createOrReplaceTempView(view)
-    try:
-        out = spark.sql(query)
-        write_parquet(
-            out, lake_path, mode="overwrite", partition_by=partition_by
-        )
-    finally:
-        for view in sources:
-            spark.catalog.dropTempView(view)
+    with _VIEWS_LOCK:
+        for view, df in sources.items():
+            df.createOrReplaceTempView(view)
+        try:
+            out = spark.sql(query)
+            out.schema
+        finally:
+            for view in sources:
+                spark.catalog.dropTempView(view)
+    write_parquet(out, lake_path, mode="overwrite", partition_by=partition_by)
     return spark.read.parquet(lake_path).count()
 
 

@@ -17,16 +17,32 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 
 
+class Layers(list):
+    """Dependency layers (a plain ``list`` of name lists, so it compares
+    equal to one) that also carry ``parents``: job -> its nearest
+    *known* ancestors, for schedulers that launch a job as soon as its
+    own parents finish instead of waiting for the whole previous
+    layer. ``parents`` is None when only the layering is known (the
+    trusted layer-column path)."""
+
+    def __init__(self, layers=(), parents: dict[str, set[str]] | None = None):
+        super().__init__(layers)
+        self.parents = parents
+
+
 def layers_from_edges(
     edges: list[tuple[str, str | None]],
     known_jobs: set[str] | None = None,
     normalize=str.lower,
-) -> list[list[str]]:
+) -> Layers:
     """Kahn's algorithm in rounds: layer k = nodes whose parents are all
     in layers < k. ``edges`` is (table, parent-or-None). Raises on
     cycles. Result filtered to ``known_jobs`` when given (the
-    reference's existing-scripts filter, dependency_utils.py:27)."""
+    reference's existing-scripts filter, dependency_utils.py:27);
+    ``parents`` then resolves through the filtered-out jobs, so with
+    A -> B -> C and B unknown, C still waits for A."""
     children: dict[str, set[str]] = defaultdict(set)
+    direct: dict[str, set[str]] = defaultdict(set)
     indeg: dict[str, int] = defaultdict(int)
     nodes: set[str] = set()
     for table, parent in edges:
@@ -37,6 +53,7 @@ def layers_from_edges(
             nodes.add(p)
             if t not in children[p]:
                 children[p].add(t)
+                direct[t].add(p)
                 indeg[t] += 1
     frontier = sorted(n for n in nodes if indeg[n] == 0)
     layers: list[list[str]] = []
@@ -54,12 +71,21 @@ def layers_from_edges(
     if seen != len(nodes):
         cyclic = sorted(n for n in nodes if indeg[n] > 0)
         raise ValueError(f"dependency cycle among: {cyclic}")
-    if known_jobs is not None:
-        layers = [
-            [j for j in layer if j in known_jobs] for layer in layers
-        ]
-        layers = [l for l in layers if l]
-    return layers
+    known = nodes if known_jobs is None else nodes & set(known_jobs)
+    # nearest known ancestors, in layer order so every parent's entry
+    # already exists: a known parent stands for itself, an unknown one
+    # for its own nearest known ancestors
+    nearest: dict[str, set[str]] = {}
+    for layer in layers:
+        for n in layer:
+            nearest[n] = set()
+            for p in direct[n]:
+                nearest[n] |= {p} if p in known else nearest[p]
+    layers = [[j for j in layer if j in known] for layer in layers]
+    return Layers(
+        [layer for layer in layers if layer],
+        {j: nearest[j] for j in known},
+    )
 
 
 def layered_jobs(
@@ -69,13 +95,14 @@ def layered_jobs(
     parent_col: str = "Parent Table",
     layer_col: str | None = None,
     prefix: str = "",
-) -> list[list[str]]:
+) -> Layers:
     """Layered job ordering from a dependency DataFrame.
 
     ``layer_col`` given -> trust the precomputed layer (reference
     behavior, dependency_utils.py:28-32); otherwise derive with Kahn.
     ``prefix`` replicates the reference's job-name prefixing
-    (``nis_`` + table, dependency_utils.py:26)."""
+    (``nis_`` + table, dependency_utils.py:26). Only the derived
+    layers carry ``parents``; the trusted column names no edges."""
     rows = deps_df.collect()  # control metadata: tiny by construction
     if layer_col:
         by_layer: dict[int, list[str]] = defaultdict(list)
@@ -83,7 +110,7 @@ def layered_jobs(
             name = f"{prefix}{str(r[table_col]).strip().lower()}"
             if known_jobs is None or name in known_jobs:
                 by_layer[int(r[layer_col])].append(name)
-        return [sorted(by_layer[k]) for k in sorted(by_layer)]
+        return Layers(sorted(by_layer[k]) for k in sorted(by_layer))
     edges = [
         (
             f"{prefix}{str(r[table_col]).strip().lower()}",

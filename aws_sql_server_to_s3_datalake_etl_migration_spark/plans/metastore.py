@@ -3,15 +3,27 @@
 Append-only job-run records with the exact schema of ``utils.py:461-468``
 (job_name, job_args, job_status, job_start_time, job_end_time,
 job_duration), persisted as parquet (or JDBC via the generic sink).
+
+Each record is one small parquet file built in driver memory and
+written through the Hadoop FileSystem API: no Spark job per record, and
+a unique file name per record, so concurrent ``record`` calls need no
+lock (a Spark append per record would share the Hadoop committer's
+``_temporary/0`` staging dir, where one commit's cleanup deletes
+another's in-flight files). ``read`` takes the whole directory,
+including files an older Spark-append version of this class wrote.
 """
 
 from __future__ import annotations
 
+import io
 import math
-import threading
+import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -19,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..sources.fs import write_bytes_file
 
 METADATA_SCHEMA = StructType(
     [
@@ -30,6 +44,9 @@ METADATA_SCHEMA = StructType(
         StructField("job_duration", IntegerType(), True),
     ]
 )
+# as written: UTC instants in microseconds, which Spark reads back as
+# TimestampType
+_ARROW_SCHEMA = to_arrow_schema(METADATA_SCHEMA)
 
 
 class OperationalMetastore:
@@ -39,14 +56,6 @@ class OperationalMetastore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # Concurrent appends to one parquet path race on the Hadoop
-        # committer's shared ``_temporary/0`` staging dir (job A's
-        # commit-cleanup deletes job B's in-flight task files), so
-        # record() serializes. Fine here: records are single control-
-        # plane rows from one driver. Multi-driver deployments should
-        # point the metastore at the JDBC sink (utils.py:481-490
-        # analog), where the database serializes writers instead.
-        self._append_lock = threading.Lock()
 
     def record(
         self,
@@ -58,21 +67,26 @@ class OperationalMetastore:
     ) -> None:
         end = end or datetime.now(timezone.utc)
         duration = math.ceil((end - start).total_seconds())  # utils.py:372
-        df = self.spark.createDataFrame(
+        row = pa.Table.from_pylist(
             [
-                (
-                    job_name,
-                    job_args,
-                    job_status,
-                    start.replace(tzinfo=None),
-                    end.replace(tzinfo=None),
-                    int(duration),
-                )
+                {
+                    "job_name": job_name,
+                    "job_args": job_args,
+                    "job_status": job_status,
+                    "job_start_time": start,
+                    "job_end_time": end,
+                    "job_duration": int(duration),
+                }
             ],
-            METADATA_SCHEMA,
+            schema=_ARROW_SCHEMA,
         )
-        with self._append_lock:
-            df.write.mode("append").parquet(self.path)
+        buf = io.BytesIO()
+        pq.write_table(row, buf)
+        write_bytes_file(
+            self.spark,
+            f"{self.path.rstrip('/')}/part-{uuid.uuid4().hex}.parquet",
+            buf.getvalue(),
+        )
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(METADATA_SCHEMA).parquet(self.path)

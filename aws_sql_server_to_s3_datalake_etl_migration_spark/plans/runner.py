@@ -7,13 +7,21 @@ thread tagged with a FAIR scheduler pool so concurrent jobs share
 executors fairly), ``run_series`` keeps the reference's
 failure-cascade: on the first failure every later job is marked
 SUSPENDED and an exception is raised (utils.py:375-384, with the
-arg-indexing bug of §2.11 fixed).
+arg-indexing bug of §2.11 fixed). ``run_layers`` replaces the
+reference's per-layer barrier with dependency-ready launch: a job
+starts once its own parents succeeded, and a failure suspends only its
+descendants.
 """
 
 from __future__ import annotations
 
 import traceback
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import (
+    FIRST_COMPLETED,
+    Future,
+    ThreadPoolExecutor,
+    wait,
+)
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable
@@ -141,13 +149,65 @@ class JobRunner:
         layers: list[list[str]],
         max_batch_size: int = 25,
     ) -> list[JobResult]:
-        """The driver pipeline's core loop (driver_ingestions.py:58-61):
-        for each dependency layer, run its jobs in parallel batches of
-        at most ``max_batch_size``."""
-        from .dependencies import batches
+        """The driver pipeline's core loop (driver_ingestions.py:58-61),
+        dependency-ready: each job starts as soon as its own parents
+        have SUCCEEDED, on a pool of ``min(max_parallel,
+        max_batch_size)`` threads, instead of behind a per-layer
+        barrier. Parents come from ``layers.parents`` (see
+        ``dependencies.Layers``); without them every job of a layer
+        depends on the whole previous layer, which is the reference's
+        barrier. A FAILED job's descendants are recorded SUSPENDED and
+        never run; unrelated jobs run on. Results come back in layer
+        order."""
+        order = [j for layer in layers for j in layer]
+        unknown = [j for j in order if j not in self._jobs]
+        if unknown:
+            raise KeyError(f"unregistered jobs: {unknown}")
+        parents = getattr(layers, "parents", None)
+        if parents is None:
+            parents = {
+                j: set(layers[i - 1]) if i else set()
+                for i, layer in enumerate(layers)
+                for j in layer
+            }
+        blocking = {j: set(parents[j]) for j in order}
+        children: dict[str, list[str]] = {j: [] for j in order}
+        for j in order:
+            for p in blocking[j]:
+                children[p].append(j)
+        results: dict[str, JobResult] = {}
+        running: dict[Future, str] = {}
+        pending = order  # not yet launched, in layer order
 
-        out: list[JobResult] = []
-        for layer in layers:
-            for batch in batches(layer, max_batch_size):
-                out.extend(self.run_parallel(batch))
-        return out
+        def suspend_descendants(name: str) -> None:
+            stack = list(children[name])
+            while stack:
+                j = stack.pop()
+                if j not in results:
+                    now = datetime.now(timezone.utc)
+                    results[j] = JobResult(j, "SUSPENDED", now, now)
+                    self._log(results[j], ())
+                    stack.extend(children[j])
+
+        with ThreadPoolExecutor(
+            max_workers=min(self.max_parallel, max_batch_size)
+        ) as pool:
+            while True:
+                # a suspended job keeps its failed parent in ``blocking``
+                # for good, so it is never launched
+                for j in pending:
+                    if not blocking[j]:
+                        running[pool.submit(self._run_one, j, ())] = j
+                pending = [j for j in pending if blocking[j]]
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
+                    res = results[name] = fut.result()
+                    if res.status == "SUCCEEDED":
+                        for ch in children[name]:
+                            blocking[ch].discard(name)
+                    else:
+                        suspend_descendants(name)
+        return [results[j] for j in order]

@@ -78,21 +78,33 @@ def list_data_files(spark: SparkSession, path: str) -> list[str]:
     )
 
 
-def write_text_file(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small driver-side text file (overwrite) through the
-    Hadoop FileSystem API — same store portability as the listings
-    above. For control-plane markers (commit ids, sidecars), never
-    data."""
-    fs, p = _fs_and_path(spark, path)
-    out = fs.create(p, True)
+def write_bytes_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write a small driver-side file through the Hadoop FileSystem API
+    — same store portability as the listings above. For control-plane
+    files (commit ids, sidecars, metastore records), never bulk data.
+
+    The bytes land under a ``_``-prefixed sibling name first and are
+    then renamed onto ``path``, so a reader that skips ``_`` names (as
+    Spark's file sources do) never sees a partly written file. ``path``
+    must not exist yet."""
+    # one class lookup for both paths: every py4j round trip counts on
+    # a per-job control-plane write
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    p = jpath(path)
+    tmp = jpath(p.getParent(), f"_{path.rstrip('/').rpartition('/')[2]}.tmp")
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, True)
     try:
-        out.write(bytearray(content.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+    if not fs.rename(tmp, p):
+        fs.delete(tmp, False)
+        raise IOError(f"could not publish {path}")
 
 
 def read_text_file(spark: SparkSession, path: str) -> str | None:
-    """Read a small text file written by ``write_text_file``;
+    """Read a small UTF-8 text file written by ``write_bytes_file``;
     ``None`` if absent."""
     fs, p = _fs_and_path(spark, path)
     if not fs.exists(p):

@@ -106,7 +106,9 @@ def swap_overwrite(
                 f"sidecar name {name!r} must start with '_' so parquet "
                 "readers skip it"
             )
-        _fsmod.write_text_file(spark, f"{staging}/{name}", content)
+        _fsmod.write_bytes_file(
+            spark, f"{staging}/{name}", content.encode("utf-8")
+        )
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path
     p_target, p_staging, p_old = (

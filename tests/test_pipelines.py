@@ -3,6 +3,8 @@ sources→SQL→parquet table-job template."""
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from aws_sql_server_to_s3_datalake_etl_migration_spark.pipelines import (
@@ -335,3 +337,27 @@ def test_vector_ingest_bootstrap_replay_is_exactly_once(spark, tmp_path):
     assert codes.count() == 200
     again = {r.vec_id: list(r.pq_codes) for r in codes.collect()}
     assert again == first
+
+
+def test_ingest_query_to_lake_concurrent_same_view_name(spark, tmp_path):
+    # two jobs both call their source "src" (the template names views
+    # after source tables); each lake table must hold its own rows
+    from concurrent.futures import ThreadPoolExecutor
+
+    sizes = {"big": 1000, "small": 50}
+    for rep in range(10):
+        go = threading.Barrier(2)
+
+        def job(name):
+            src = spark.range(sizes[name])
+            go.wait(timeout=30)
+            return ingest_query_to_lake(
+                spark, {"src": src}, "SELECT * FROM src",
+                str(tmp_path / f"{name}_{rep}"),
+            )
+
+        with ThreadPoolExecutor(2) as pool:
+            got = dict(zip(sizes, pool.map(job, sizes)))
+        assert got == sizes, f"repetition {rep}"
+        for name, n in sizes.items():
+            assert spark.read.parquet(str(tmp_path / f"{name}_{rep}")).count() == n

@@ -3,11 +3,14 @@ serial-with-SUSPENDED), metastore, recon report."""
 
 from __future__ import annotations
 
+import threading
 import time
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
 from aws_sql_server_to_s3_datalake_etl_migration_spark.plans import (
+    METADATA_SCHEMA,
     JobRunner,
     OperationalMetastore,
     layered_jobs,
@@ -139,6 +142,151 @@ def test_run_layers_end_to_end(spark):
     assert order[0] == "c" and set(order[1:]) == {"o", "l"}
 
 
+def test_layers_parents_resolve_through_unknown_jobs():
+    # a -> b -> c, a -> d; b is not a known job, so c waits on a
+    edges = [("a", None), ("b", "a"), ("c", "b"), ("d", "a"), ("e", None)]
+    layers = layers_from_edges(edges, known_jobs={"a", "c", "d", "e"})
+    assert layers == [["a", "e"], ["d"], ["c"]]
+    assert layers.parents == {
+        "a": set(), "e": set(), "d": {"a"}, "c": {"a"},
+    }
+    # through a chain of unknowns, and stopping at the nearest known
+    chain = layers_from_edges(
+        [("x", None), ("y", "x"), ("z", "y"), ("w", "z")],
+        known_jobs={"x", "y", "w"},
+    )
+    assert chain.parents["w"] == {"y"}
+
+
+def test_run_layers_launches_child_before_slow_sibling_finishes(spark):
+    # fast -> child, slow is in fast's layer but unrelated to child:
+    # slow only finishes once child has run, which a layer barrier
+    # would never allow (it would time out instead)
+    child_ran = threading.Event()
+    runner = JobRunner(spark, max_parallel=2)
+    runner.register("fast", lambda: "fast")
+    runner.register("slow", lambda: child_ran.wait(timeout=30))
+    runner.register("child", child_ran.set)
+    layers = layers_from_edges(
+        [("fast", None), ("slow", None), ("child", "fast")]
+    )
+    assert layers == [["fast", "slow"], ["child"]]
+    results = runner.run_layers(layers)
+    assert [r.job_name for r in results] == ["fast", "slow", "child"]
+    assert [r.status for r in results] == ["SUCCEEDED"] * 3
+    assert results[1].value is True  # slow saw child's event, not a timeout
+
+
+def test_run_layers_failure_suspends_only_descendants(spark, tmp_path):
+    meta = OperationalMetastore(spark, str(tmp_path / "meta_layers"))
+    runner = JobRunner(spark, meta, max_parallel=4)
+    ran = []
+    for name in ("a", "b", "c", "d", "e"):
+        runner.register(name, lambda n=name: ran.append(n))
+    runner.register("boom", lambda: 1 / 0)
+    # boom -> b -> c; a -> d; e alone
+    layers = layers_from_edges(
+        [("a", None), ("boom", None), ("e", None), ("b", "boom"),
+         ("c", "b"), ("d", "a")]
+    )
+    results = runner.run_layers(layers)
+    status = {r.job_name: r.status for r in results}
+    assert status == {
+        "a": "SUCCEEDED", "boom": "FAILED", "e": "SUCCEEDED",
+        "b": "SUSPENDED", "d": "SUCCEEDED", "c": "SUSPENDED",
+    }
+    assert sorted(ran) == ["a", "d", "e"]
+    assert [r.job_name for r in results] == [j for l in layers for j in l]
+    logged = {r.job_name: r.job_status for r in meta.read().collect()}
+    assert logged == status
+
+
+def test_run_layers_without_edges_keeps_barrier_order(spark):
+    # trusted layer column: no edges, so every job of a layer waits for
+    # the whole previous layer
+    df = spark.createDataFrame(
+        [("s", None, 0), ("f", None, 0), ("k", "f", 1)],
+        ["Table", "Parent Table", "Layer"],
+    )
+    layers = layered_jobs(df, layer_col="Layer")
+    assert layers == [["f", "s"], ["k"]] and layers.parents is None
+    events = []
+    runner = JobRunner(spark, max_parallel=4)
+    runner.register("f", lambda: events.append("f"))
+
+    def slow():
+        time.sleep(0.5)
+        events.append("s")
+
+    runner.register("s", slow)
+    runner.register("k", lambda: events.append("k"))
+    results = runner.run_layers(layers)
+    assert [r.status for r in results] == ["SUCCEEDED"] * 3
+    assert events[-1] == "k"
+    # ...and a failure in a layer suspends every later layer
+    runner.register("s", lambda: 1 / 0)
+    status = [r.status for r in runner.run_layers(layers)]
+    assert status == ["SUCCEEDED", "FAILED", "SUSPENDED"]
+
+
+def test_metastore_concurrent_records(spark, tmp_path):
+    meta = OperationalMetastore(spark, str(tmp_path / "meta_conc"))
+    t0 = datetime.now(timezone.utc)
+    start = threading.Barrier(8)
+
+    def rec(i):
+        start.wait(timeout=30)
+        meta.record(f"j{i}", "[]", "SUCCEEDED", t0, t0 + timedelta(seconds=i))
+
+    threads = [threading.Thread(target=rec, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    rows = meta.read().collect()
+    assert sorted(r.job_name for r in rows) == [f"j{i}" for i in range(8)]
+    assert {r.job_name: r.job_duration for r in rows} == {
+        f"j{i}": i for i in range(8)
+    }
+
+
+def test_metastore_roundtrip_values(spark, tmp_path):
+    meta = OperationalMetastore(spark, str(tmp_path / "meta_rt"))
+    start = datetime(2024, 3, 1, 23, 59, 58, 123456, tzinfo=timezone.utc)
+    end = start + timedelta(seconds=2, microseconds=500001)
+    meta.record("nis_orders", "['x', 1]", "FAILED", start, end)
+    (row,) = meta.read().collect()
+    assert row.job_name == "nis_orders"
+    assert row.job_args == "['x', 1]"
+    assert row.job_status == "FAILED"
+    # collected timestamps are naive local time; compare as instants
+    assert row.job_start_time.astimezone(timezone.utc) == start
+    assert row.job_end_time.astimezone(timezone.utc) == end
+    assert row.job_duration == 3  # ceil, utils.py:372
+
+
+def test_metastore_reads_legacy_spark_appends(spark, tmp_path):
+    path = str(tmp_path / "meta_legacy")
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    # a record as the Spark-append metastore wrote it
+    spark.createDataFrame(
+        [("old", "[]", "SUCCEEDED", t0.replace(tzinfo=None),
+          (t0 + timedelta(seconds=7)).replace(tzinfo=None), 7)],
+        METADATA_SCHEMA,
+    ).write.mode("append").parquet(path)
+    meta = OperationalMetastore(spark, path)
+    meta.record("new", "[]", "SUCCEEDED", t0, t0 + timedelta(seconds=4))
+    meta.record("old", "[]", "FAILED", t0, t0 + timedelta(seconds=9))
+    rows = meta.read().collect()
+    assert sorted((r.job_name, r.job_status) for r in rows) == [
+        ("new", "SUCCEEDED"), ("old", "FAILED"), ("old", "SUCCEEDED"),
+    ]
+    last = {r.TableName: r.IngestionTime
+            for r in meta.last_success_durations().collect()}
+    assert last == {"old": 7, "new": 4}
+
+
 def test_recon_report_and_assert(spark, tmp_path, sf_dir):
     lake = tmp_path / "lake"
     src = spark.read.parquet(f"{sf_dir}/nation.parquet")
@@ -151,8 +299,6 @@ def test_recon_report_and_assert(spark, tmp_path, sf_dir):
         return spark.read.parquet(f"{sf_dir}/{table.split('_', 1)[1]}.parquet")
 
     meta = OperationalMetastore(spark, str(tmp_path / "meta3"))
-    from datetime import datetime, timedelta, timezone
-
     t0 = datetime.now(timezone.utc)
     meta.record("nis_nation", "[]", "SUCCEEDED", t0, t0 + timedelta(seconds=3))
     # lake root addressed by URI: the Hadoop FS port means any scheme
