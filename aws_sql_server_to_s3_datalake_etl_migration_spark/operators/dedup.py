@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..session import with_coalesced_cached_rounds
 from pyspark.sql.window import Window
 
+from .fixpoint import fixpoint
 from .textops import tokens
 
 
@@ -686,10 +687,13 @@ def connected_components(
     Raises if ``max_iter`` rounds don't converge (pathological chain
     — raise the budget explicitly rather than silently returning
     half-merged clusters; for graphs whose diameter is NOT shallow,
-    use ``operators.graph.star_connected_components`` — O(log n)
-    rounds — which is what ``graph.connected_components`` now runs;
-    this loop stays for the NULL-id-tolerant near-dup clusters it
-    was built for).
+    use ``operators.graph.star_connected_components``, O(log n)
+    rounds). This loop stays because it is the fastest of the three
+    on shallow dup graphs: rerouting its callers to star contraction
+    slowed emb_semantic_dedup_exact 7.35 -> 12.53 s and
+    emb_semantic_dedup_cells 4.28 -> 6.90 s in a same-session A/B
+    (table in ``graph.connected_components``); it also tolerates
+    NULL ids.
 
     SINGLE-REFERENCE rounds (fixed round 11): the original round
     referenced ``labels`` twice (neighbor-min join + a keep-own-label
@@ -746,40 +750,33 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = node_ids.withColumn("lbl", F.col("id")).persist()
 
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)"))
-        ).collect()[0][0]
+    def one_round(labels: DataFrame) -> DataFrame:
+        # self-loops make this min(own, neighbors) in one pass;
+        # eqNullSafe keeps a NULL node id as a legal singleton
+        return (
+            edges_all.join(labels, edges_all.dst.eqNullSafe(labels.id))
+            .groupBy("src")
+            .agg(F.min("lbl").alias("lbl"))
+            .select(F.col("src").alias("id"), "lbl")
+        )
 
-    prev_sum = _label_sum(labels)  # also materializes the persist
     try:
-        for _ in range(max_iter):
-            # self-loops make this min(own, neighbors) in one pass;
-            # eqNullSafe keeps a NULL node id as a legal singleton
-            new_labels = (
-                edges_all.join(
-                    labels, edges_all.dst.eqNullSafe(labels.id)
-                )
-                .groupBy("src")
-                .agg(F.min("lbl").alias("lbl"))
-                .select(F.col("src").alias("id"), "lbl")
-            ).persist()
-            cur_sum = _label_sum(new_labels)
-            labels.unpersist()
-            labels = new_labels
-            if cur_sum == prev_sum:
-                return labels.select(
-                    F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
-                )
-            prev_sum = cur_sum
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter for high-diameter graphs"
+        labels = fixpoint(
+            node_ids.withColumn("lbl", F.col("id")),
+            one_round,
+            lambda df: df.agg(
+                F.sum(F.col("lbl").cast("decimal(38,0)"))
+            ).collect()[0][0],
+            max_iter=max_iter,
+            rounds_per_step=1,
+            name="connected_components",
         )
     finally:
         edges_all.unpersist()
+    return labels.select(
+        F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,9 @@ GraphX/GraphFrames dependency — neither ships in this runtime): a
 graph is a node frame plus an edge frame, and each algorithm is the
 Pregel-on-DataFrame loop — per round, one src-keyed join of state
 onto the edge list and one dst-keyed hash-aggregation, with
-persist/materialize/unpersist per round capping lineage growth (the
-discipline ``connected_components`` and the BPE learner established).
+persist/materialize/unpersist per round capping lineage growth. The
+convergence-driven loops (both connected-components delegates,
+``k_core``, ``coreness``) run through ``fixpoint.fixpoint``.
 
 Fixed-point arithmetic throughout: scores are int64 at a caller-chosen
 scale and every contribution is a floor division, so two runs — or
@@ -26,24 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import with_coalesced_cached_rounds
-
-# Peel/h-index waves chained per persist+action materialization in
-# k_core and coreness (r14 optimization, guide §1.2: the per-step
-# persist + scalar action + AQE barriers dominate wall clock on small
-# per-round frames, so fewer materializations with deeper
-# single-reference chains win until codegen/analysis depth bites —
-# 3 measured best on the registered link graph; 2 was the r13 value).
-# The convergence tests stay EXACT at step granularity for ANY depth:
-# both loops' measures (edge count / estimate sum) are monotone
-# non-increasing per inner wave, so "unchanged across a step" still
-# means every inner wave was a no-op, i.e. the fixed point; at worst
-# _WAVES_PER_STEP - 1 redundant waves run after convergence.
-# max_iter contract (unchanged in kind from the r13 double-step): the
-# loop runs ceil(max_iter/_WAVES_PER_STEP) steps, so up to
-# _WAVES_PER_STEP - 1 extra waves may execute before the bound
-# raises — a safety valve, not an exact budget; estimates/edge sets
-# only shrink, so extra waves only land closer to the fixed point.
-_WAVES_PER_STEP = 3
+from .fixpoint import fixpoint
 
 __all__ = [
     "neighborhood_growth",
@@ -55,18 +39,6 @@ __all__ = [
     "k_core",
     "coreness",
 ]
-
-# Pointer-jump rounds chained per persist+action materialization in
-# pointer_jump_components (r15, guide §1.2 — same cadence trick as
-# _WAVES_PER_STEP below: per-step persist + scalar action + AQE
-# barriers dominate on small per-round frames, and every round
-# references its input exactly once, so a chained pair is a depth-2
-# single-reference plan with linear Catalyst analysis). Convergence
-# stays exact at step granularity: labels are non-increasing per node,
-# so "sum unchanged across a step" still means both inner rounds were
-# no-ops, i.e. the fixed point; at worst one redundant (cheap,
-# label-sized) round runs after convergence.
-_JUMPS_PER_STEP = 2
 
 
 @with_coalesced_cached_rounds
@@ -198,19 +170,29 @@ def connected_components(
     graph). ``algo="pointer_jump"`` selects
     ``pointer_jump_components`` instead (integral ids only) — the
     FastSV-style hooking/doubling loop whose rounds shuffle
-    label-sized frames instead of the edge multiset. The r15
-    same-session A/B (min-of-5, sf0.1): on the diameter-50 ER edit
-    graph star wins (4.20 vs 5.23 s — every catalog graph is SPARSE,
-    m ≈ |V|, so pointer-jump's smaller per-round shuffle volume buys
-    nothing and its extra per-round stages cost); on the shallow
-    doc-link chain graph pointer-jump wins (2.28 vs 2.66 s — fewer,
-    cheaper rounds at diameter ≤ 7). Callers pick by measurement;
-    label SEMANTICS are identical across all delegates (component =
+    label-sized frames instead of the edge multiset. The dedup
+    module keeps its own NULL-tolerant min-label loop
+    (``operators/dedup.py``). Each of the three wins somewhere, so
+    callers pick by measurement; a same-session A/B (sf0.1 bench
+    lake, 4 cores, medians of 5 alternating iterations, result
+    hashes identical) of rerouting each caller:
+
+    ==========================  ===========  =============  =======
+    query                       own loop     rerouted to    seconds
+    ==========================  ===========  =============  =======
+    emb_semantic_dedup_cells    min-label    star           4.28 -> 6.90
+    emb_semantic_dedup_exact    min-label    star           7.35 -> 12.53
+    emb_semantic_dedup_exact    min-label    pointer-jump   6.40 -> 20.93
+    doc_incremental_neardup     min-label    star           14.79 -> 17.40
+    doc_dup_clusters            min-label    star           5.44 -> 5.89
+    doc_link_components         pointer-jump star           3.67 -> 4.60
+    ==========================  ===========  =============  =======
+
+    Label SEMANTICS are identical across all delegates (component =
     smallest reachable id; oracle hashes unchanged, equivalence
     pinned by test_r15_optimizations). ``max_iter`` bounds
-    contraction/jump rounds (logarithmic), not diameter. The dedup
-    module keeps its own NULL-tolerant min-label loop for the shallow
-    near-dup clusters it was built for (``operators/dedup.py``).
+    contraction/jump rounds (logarithmic), not diameter; the three
+    share one round loop, ``fixpoint.fixpoint``.
     """
     if algo == "pointer_jump":
         return pointer_jump_components(
@@ -410,9 +392,7 @@ def star_connected_components(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    canon.count()
 
     def _sym(df: DataFrame) -> DataFrame:
         # both directions from ONE reference (explode, not union)
@@ -430,86 +410,78 @@ def star_connected_components(
         ).select("e.u", "e.v")
 
     w_u = Window.partitionBy("u")
-    prev = canon
-    n_prev = canon.count()
+
+    def one_round(prev: DataFrame) -> DataFrame:
+        # large-star: one single-reference chain over prev
+        sym = _sym(prev).withColumn(
+            "m", F.least(F.min("v").over(w_u), F.col("u"))
+        )
+        # large-star output is deliberately NOT distinct-ified
+        # (r14 optimization, guide §2.4): each directed row with
+        # v > u emits exactly ONE edge, so the multiset is never
+        # larger than the input edge set — no explosion is
+        # possible — and small-star is duplicate-insensitive (its
+        # window min and per-row emit are unchanged by copies;
+        # its own trailing distinct restores the set). Dropping
+        # the intermediate distinct removes one Exchange from
+        # every contraction round.
+        large = (
+            sym.where(F.col("v") > F.col("u"))
+            .select(
+                F.least("v", "m").alias("a"),
+                F.greatest("v", "m").alias("b"),
+            )
+            .where(F.col("a") != F.col("b"))
+        )
+        # small-star: one single-reference chain over large
+        sm = (
+            _sym(large)
+            .where(F.col("v") < F.col("u"))
+            .withColumn("m", F.min("v").over(w_u))
+        )
+        return (
+            sm.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("v").alias("x"),
+                            F.col("m").alias("y"),
+                        ),
+                        F.struct(
+                            F.col("u").alias("x"),
+                            F.col("m").alias("y"),
+                        ),
+                    )
+                ).alias("e")
+            )
+            .select("e.x", "e.y")
+            .where(F.col("x") != F.col("y"))
+            .select(
+                F.least("x", "y").alias("a"),
+                F.greatest("x", "y").alias("b"),
+            )
+            .distinct()
+        )
+
+    def same_edges(cur: DataFrame, prev: DataFrame) -> bool:
+        # left_anti on distinct sets + equal counts => set equality;
+        # runs only once the cheap counts already agree
+        return (
+            cur.join(prev, ["a", "b"], "left_anti").limit(1).count() == 0
+        )
+
+    stars = fixpoint(
+        canon,
+        one_round,
+        DataFrame.count,
+        proof=same_edges,
+        max_iter=max_iter,
+        rounds_per_step=1,
+        name="star_connected_components",
+    )
     try:
-        for _ in range(max_iter):
-            # large-star: one single-reference chain over prev
-            sym = _sym(prev).withColumn(
-                "m", F.least(F.min("v").over(w_u), F.col("u"))
-            )
-            # large-star output is deliberately NOT distinct-ified
-            # (r14 optimization, guide §2.4): each directed row with
-            # v > u emits exactly ONE edge, so the multiset is never
-            # larger than the input edge set — no explosion is
-            # possible — and small-star is duplicate-insensitive (its
-            # window min and per-row emit are unchanged by copies;
-            # its own trailing distinct restores the set). Dropping
-            # the intermediate distinct removes one Exchange from
-            # every contraction round.
-            large = (
-                sym.where(F.col("v") > F.col("u"))
-                .select(
-                    F.least("v", "m").alias("a"),
-                    F.greatest("v", "m").alias("b"),
-                )
-                .where(F.col("a") != F.col("b"))
-            )
-            # small-star: one single-reference chain over large
-            sm = (
-                _sym(large)
-                .where(F.col("v") < F.col("u"))
-                .withColumn("m", F.min("v").over(w_u))
-            )
-            small = (
-                sm.select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col("v").alias("x"),
-                                F.col("m").alias("y"),
-                            ),
-                            F.struct(
-                                F.col("u").alias("x"),
-                                F.col("m").alias("y"),
-                            ),
-                        )
-                    ).alias("e")
-                )
-                .select("e.x", "e.y")
-                .where(F.col("x") != F.col("y"))
-                .select(
-                    F.least("x", "y").alias("a"),
-                    F.greatest("x", "y").alias("b"),
-                )
-                .distinct()
-                .persist()
-            )
-            n_small = small.count()
-            # equal counts is carried from the last materialization
-            # (no recount job); the set-equality proof (left_anti on
-            # distinct sets + equal counts => multiset equality) runs
-            # ONLY when counts already match — near convergence, the
-            # cheap signal gates the expensive one
-            converged = n_small == n_prev and (
-                small.join(prev, ["a", "b"], "left_anti")
-                .limit(1)
-                .count()
-                == 0
-            )
-            if prev is not canon:
-                prev.unpersist()
-            prev = small
-            n_prev = n_small
-            if converged:
-                break
-        else:
-            raise RuntimeError(
-                f"star_connected_components did not converge in "
-                f"{max_iter} rounds"
-            )
         # fixed point: edges are stars (component-min, member)
-        labels = prev.select(
+        labels = stars.select(
             F.col("b").alias("_n"), F.col("a").alias("component")
         )
         out = (
@@ -525,9 +497,7 @@ def star_connected_components(
         out.count()
         return out
     finally:
-        if prev is not canon:
-            prev.unpersist()
-        canon.unpersist()
+        stars.unpersist()
 
 
 @with_coalesced_cached_rounds
@@ -585,10 +555,9 @@ def pointer_jump_components(
 
     Convergence is ONE scalar action per step (labels non-increasing
     ⟹ the exact DECIMAL(38,0) label sum strictly decreases until the
-    fixed point), doubling as the step's persist materialization;
-    ``_JUMPS_PER_STEP`` rounds chain per step (header note). Raises
-    after ``max_iter`` rounds rather than returning half-merged
-    components."""
+    fixed point), doubling as the step's persist materialization; two
+    jumps chain per step (``fixpoint``, which also states the
+    ``max_iter`` contract)."""
     from pyspark.sql.window import Window
 
     n = nodes.select(F.col(node_col).alias("_n"))
@@ -698,52 +667,45 @@ def pointer_jump_components(
             .select(F.col("_c").alias("v"), "f")
         )
 
-    est = (
+    start = (
         directed_all.groupBy("x")
         .agg(F.min("y").alias("f"))
         .select(F.col("x").alias("v"), "f")
-        .persist()
     )
-    prev_sum = est.agg(
-        F.sum(F.col("f").cast("decimal(38,0)"))
-    ).collect()[0][0]
     try:
-        for _ in range(max(1, -(-max_iter // _JUMPS_PER_STEP))):
-            chained = est
-            for _j in range(_JUMPS_PER_STEP):
-                chained = one_jump(chained)
-            nxt = chained.persist()
-            cur_sum = nxt.agg(
+        est = fixpoint(
+            start,
+            one_jump,
+            lambda df: df.agg(
                 F.sum(F.col("f").cast("decimal(38,0)"))
-            ).collect()[0][0]
-            est.unpersist()
-            est = nxt
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                f"pointer_jump_components did not converge in "
-                f"{max_iter} rounds"
-            )
-        out = (
-            n.join(
-                est.select(
-                    F.col("v").alias("_n"), F.col("f").alias("component")
-                ),
-                "_n",
-                "left",
-            )
-            .select(
-                F.col("_n").alias(node_col),
-                F.coalesce("component", F.col("_n")).alias("component"),
-            )
+            ).collect()[0][0],
+            max_iter=max_iter,
+            rounds_per_step=2,
+            name="pointer_jump_components",
         )
-        out = out.persist()
-        out.count()
-        return out
+        try:
+            out = (
+                n.join(
+                    est.select(
+                        F.col("v").alias("_n"),
+                        F.col("f").alias("component"),
+                    ),
+                    "_n",
+                    "left",
+                )
+                .select(
+                    F.col("_n").alias(node_col),
+                    F.coalesce("component", F.col("_n")).alias(
+                        "component"
+                    ),
+                )
+            )
+            out = out.persist()
+            out.count()
+            return out
+        finally:
+            est.unpersist()
     finally:
-        est.unpersist()
         directed_all.unpersist()
 
 
@@ -798,10 +760,7 @@ def k_core(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    n_prev = e.count()
-    prev = e
     from pyspark.sql.window import Window
 
     w_x = Window.partitionBy("x")
@@ -836,37 +795,20 @@ def k_core(
             .select("a", "b")
         )
 
-    # TWO peel waves per materialization (the coreness r13 trick).
-    # max_iter contract: the loop runs ceil(max_iter/2) double
-    # steps, so an ODD max_iter admits at most one extra wave
-    # (max_iter+1 total) before raising — the bound is a safety
-    # valve, not an exact budget, and estimates only shrink, so the
-    # extra wave can only land closer to the fixed point:
-    # each wave references its input once, so the chained pair is a
-    # depth-2 single-reference plan — analysis stays linear — while
-    # the per-step persist + count + AQE barriers halve. The count
-    # test stays exact at step granularity: the edge list only
-    # shrinks, so an unchanged count across a double step means both
-    # inner waves removed nothing (at worst one redundant wave runs).
+    # three peel waves per materialization (``fixpoint``; 3 measured
+    # best on the registered link graph in r14, 2 before): the edge
+    # count only shrinks, so it is an exact monotone measure
+    core = fixpoint(
+        e,
+        one_wave,
+        DataFrame.count,
+        max_iter=max_iter,
+        rounds_per_step=3,
+        name="k_core",
+    )
     try:
-        for _ in range(max(1, -(-max_iter // _WAVES_PER_STEP))):
-            chained = prev
-            for _w in range(_WAVES_PER_STEP):
-                chained = one_wave(chained)
-            nxt = chained.persist()
-            n_nxt = nxt.count()
-            if prev is not e:
-                prev.unpersist()
-            prev = nxt
-            if n_nxt == n_prev:
-                break
-            n_prev = n_nxt
-        else:
-            raise RuntimeError(
-                f"k_core did not stabilize in {max_iter} peel rounds"
-            )
         # at the fixed point every incident endpoint holds degree >= k
-        survivors = _directed(prev).select("x").distinct()
+        survivors = _directed(core).select("x").distinct()
         out = (
             nodes.select(F.col(node_col).alias("_n"))
             .join(
@@ -885,9 +827,7 @@ def k_core(
         out.count()
         return out
     finally:
-        if prev is not e:
-            prev.unpersist()
-        e.unpersist()
+        core.unpersist()
 
 
 @with_coalesced_cached_rounds
@@ -973,14 +913,12 @@ def coreness(
     directed_all.count()
     e.unpersist()
 
-    est = (
+    start = (
         directed_all.where(F.col("x") != F.col("y"))
         .groupBy("x")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .select(F.col("x").alias("v"), "c")
-        .persist()
     )
-    prev_sum = est.agg(F.sum("c")).collect()[0][0]
 
     # h-index per node as ONE hash aggregation (r12 shipped this as a
     # row_number window; the window's exchange+SORT of all m rows per
@@ -1023,57 +961,42 @@ def coreness(
             .select(F.col("x").alias("v"), "c")
         )
 
-    # TWO h-index rounds per materialization (max_iter contract:
-    # ceil(max_iter/2) double steps, so an ODD max_iter admits at
-    # most one extra round before raising — safety valve, not an
-    # exact budget; estimates are non-increasing so the extra round
-    # only moves closer to the fixed point): each round still
-    # references its input exactly once, so a 2-round chain is a
-    # depth-2 single-reference plan — analysis stays linear — while
-    # the driver pays HALF the per-step sync cost (persist + scalar
-    # action + AQE stage barriers dominate wall clock on small
-    # graphs; the arithmetic is the same either way). The sum test
-    # stays exact at step granularity: estimates are non-increasing,
-    # so "sum unchanged across a step" still ⟺ both inner rounds
-    # were no-ops ⟺ fixed point (at worst one redundant round runs).
+    # three h-index rounds per materialization (``fixpoint``; the
+    # k_core cadence): estimates are non-increasing, so their bigint
+    # sum is an exact monotone measure
     try:
-        for _ in range(max(1, -(-max_iter // _WAVES_PER_STEP))):
-            chained = est
-            for _w in range(_WAVES_PER_STEP):
-                chained = one_round(chained)
-            nxt = chained.persist()
-            cur_sum = nxt.agg(F.sum("c")).collect()[0][0]
-            est.unpersist()
-            est = nxt
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                f"coreness did not stabilize in {max_iter} rounds"
-            )
-        out = (
-            nodes.select(F.col(node_col).alias("_n"))
-            .join(
-                est.select(
-                    F.col("v").alias("_n"),
-                    F.col("c").alias("coreness"),
-                ),
-                "_n",
-                "left",
-            )
-            .select(
-                F.col("_n").alias(node_col),
-                F.coalesce("coreness", F.lit(0))
-                .cast("bigint")
-                .alias("coreness"),
-            )
+        est = fixpoint(
+            start,
+            one_round,
+            lambda df: df.agg(F.sum("c")).collect()[0][0],
+            max_iter=max_iter,
+            rounds_per_step=3,
+            name="coreness",
         )
-        out = out.persist()
-        out.count()
-        return out
+        try:
+            out = (
+                nodes.select(F.col(node_col).alias("_n"))
+                .join(
+                    est.select(
+                        F.col("v").alias("_n"),
+                        F.col("c").alias("coreness"),
+                    ),
+                    "_n",
+                    "left",
+                )
+                .select(
+                    F.col("_n").alias(node_col),
+                    F.coalesce("coreness", F.lit(0))
+                    .cast("bigint")
+                    .alias("coreness"),
+                )
+            )
+            out = out.persist()
+            out.count()
+            return out
+        finally:
+            est.unpersist()
     finally:
-        est.unpersist()
         directed_all.unpersist()
 
 

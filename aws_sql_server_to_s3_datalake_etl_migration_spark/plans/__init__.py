@@ -1,5 +1,5 @@
 """Control plane (SURVEY.md §2.8 O1–O9, §2.9 R1–R5): dependency
-layering, batched parallel/serial execution, operational metastore,
+layering, dependency-ready parallel/serial execution, operational metastore,
 reconciliation."""
 
 from .dependencies import layered_jobs, layers_from_edges

@@ -124,20 +124,3 @@ def layered_jobs(
     ]
     return layers_from_edges(edges, known_jobs, normalize=lambda s: s)
 
-
-def batches(jobs: list[str], max_batch_size: int = 25) -> list[list[str]]:
-    """O2 (utils.py:45-53): split a layer into contiguous batches of at
-    most ``max_batch_size`` jobs (np.array_split semantics: sizes as
-    even as possible)."""
-    if not jobs:
-        return []
-    import math
-
-    n_batches = math.ceil(len(jobs) / max_batch_size)
-    base, extra = divmod(len(jobs), n_batches)
-    out, i = [], 0
-    for b in range(n_batches):
-        size = base + (1 if b < extra else 0)
-        out.append(jobs[i : i + size])
-        i += size
-    return out

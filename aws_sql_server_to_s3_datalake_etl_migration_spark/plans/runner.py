@@ -52,12 +52,10 @@ class JobRunner:
         spark: SparkSession,
         metastore: OperationalMetastore | None = None,
         max_parallel: int = 25,  # reference max_batch_size
-        max_retries: int = 0,  # reference MaxRetries=0, infra_utils.py:110
     ):
         self.spark = spark
         self.metastore = metastore
         self.max_parallel = max_parallel
-        self.max_retries = max_retries
         self._jobs: dict[str, Job] = {}
 
     def register(self, name: str, fn: Job) -> None:
@@ -76,15 +74,14 @@ class JobRunner:
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"job_{name}"
         )
+        # one attempt, as the reference's MaxRetries=0
+        # (infra_utils.py:110): a retried lake append could write the
+        # same rows twice
         try:
-            for attempt in range(self.max_retries + 1):
-                try:
-                    res.value = self._jobs[name](*args)
-                    res.status = "SUCCEEDED"
-                    res.error = None
-                    break
-                except Exception as e:  # isolate: record, don't propagate
-                    res.error = f"{e}\n{traceback.format_exc(limit=5)}"
+            res.value = self._jobs[name](*args)
+            res.status = "SUCCEEDED"
+        except Exception as e:  # isolate: record, don't propagate
+            res.error = f"{e}\n{traceback.format_exc(limit=5)}"
         finally:
             res.end = datetime.now(timezone.utc)
             self.spark.sparkContext.setLocalProperty(
@@ -144,15 +141,11 @@ class JobRunner:
                 ) from None
         return results
 
-    def run_layers(
-        self,
-        layers: list[list[str]],
-        max_batch_size: int = 25,
-    ) -> list[JobResult]:
+    def run_layers(self, layers: list[list[str]]) -> list[JobResult]:
         """The driver pipeline's core loop (driver_ingestions.py:58-61),
         dependency-ready: each job starts as soon as its own parents
-        have SUCCEEDED, on a pool of ``min(max_parallel,
-        max_batch_size)`` threads, instead of behind a per-layer
+        have SUCCEEDED, on a pool of ``max_parallel`` threads (the
+        reference's ``max_batch_size``), instead of behind a per-layer
         barrier. Parents come from ``layers.parents`` (see
         ``dependencies.Layers``); without them every job of a layer
         depends on the whole previous layer, which is the reference's
@@ -189,9 +182,7 @@ class JobRunner:
                     self._log(results[j], ())
                     stack.extend(children[j])
 
-        with ThreadPoolExecutor(
-            max_workers=min(self.max_parallel, max_batch_size)
-        ) as pool:
+        with ThreadPoolExecutor(max_workers=self.max_parallel) as pool:
             while True:
                 # a suspended job keeps its failed parent in ``blocking``
                 # for good, so it is never launched

@@ -72,7 +72,7 @@ def test_full_driver_pipeline(spark, tmp_path, sf_dir):
     layers = layered_jobs(deps, prefix="nis_")  # derived via Kahn
     assert layers == [["nis_nation"], ["nis_customer"], ["nis_orders"]]
 
-    results = runner.run_layers(layers, max_batch_size=25)
+    results = runner.run_layers(layers)
     assert [r.status for r in results] == ["SUCCEEDED"] * 3
     assert all(r.value > 0 for r in results)
 

@@ -17,9 +17,6 @@ from aws_sql_server_to_s3_datalake_etl_migration_spark.plans import (
     layers_from_edges,
     recon_report,
 )
-from aws_sql_server_to_s3_datalake_etl_migration_spark.plans.dependencies import (
-    batches,
-)
 from aws_sql_server_to_s3_datalake_etl_migration_spark.plans.recon import (
     assert_reconciled,
 )
@@ -62,14 +59,6 @@ def test_layered_jobs_trusted_and_derived(spark):
     assert filtered == [["nis_customer"], ["nis_lineitem"]]
 
 
-def test_batches_even_split():
-    jobs = [f"j{i}" for i in range(7)]
-    got = batches(jobs, max_batch_size=3)
-    assert [len(b) for b in got] == [3, 2, 2]
-    assert sum(got, []) == jobs
-    assert batches([], 3) == []
-
-
 def test_run_parallel_isolates_failures(spark, tmp_path):
     meta = OperationalMetastore(spark, str(tmp_path / "meta"))
     runner = JobRunner(spark, meta)
@@ -109,8 +98,9 @@ def test_run_series_suspends_downstream(spark, tmp_path):
     }
 
 
-def test_runner_retries_flaky_job(spark):
-    runner = JobRunner(spark, max_retries=2)
+def test_runner_runs_failing_job_once(spark):
+    # the reference's MaxRetries=0: a retried lake append could write
+    # the same rows twice
     attempts = {"n": 0}
 
     def flaky():
@@ -119,25 +109,18 @@ def test_runner_retries_flaky_job(spark):
             raise ValueError("transient")
         return "ok"
 
+    runner = JobRunner(spark)
     runner.register("flaky", flaky)
     (res,) = runner.run_parallel(["flaky"])
-    assert res.status == "SUCCEEDED" and res.value == "ok"
-    assert attempts["n"] == 3
-
-    # default stays at the reference's MaxRetries=0
-    runner0 = JobRunner(spark)
-    attempts["n"] = 0
-    runner0.register("flaky", flaky)
-    (res0,) = runner0.run_parallel(["flaky"])
-    assert res0.status == "FAILED" and attempts["n"] == 1
+    assert res.status == "FAILED" and attempts["n"] == 1
 
 
 def test_run_layers_end_to_end(spark):
-    runner = JobRunner(spark)
+    runner = JobRunner(spark, max_parallel=2)
     order = []
     for name in ("c", "o", "l"):
         runner.register(name, lambda n=name: order.append(n))
-    results = runner.run_layers([["c"], ["o", "l"]], max_batch_size=2)
+    results = runner.run_layers([["c"], ["o", "l"]])
     assert [r.status for r in results] == ["SUCCEEDED"] * 3
     assert order[0] == "c" and set(order[1:]) == {"o", "l"}
 

@@ -225,6 +225,51 @@ def test_iterative_operators_leave_no_stale_cache(spark):
     assert _cached_rdd_count(spark) == 0, "label_propagation"
 
 
+def _path_cc(op):
+    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators import (
+        dedup,
+        graph,
+    )
+
+    def run(ndf, edf, **kw):
+        if op == "dedup":
+            return dedup.connected_components(
+                edf.select(
+                    F.col("src").alias("id_a"), F.col("dst").alias("id_b")
+                ),
+                ndf.select(F.col("node").alias("doc_id")),
+                **kw,
+            )
+        if op == "k_core":
+            return graph.k_core(ndf, edf, 2, **kw)
+        return getattr(graph, op)(ndf, edf, **kw)
+
+    return run
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "star_connected_components",
+        "pointer_jump_components",
+        "k_core",
+        "coreness",
+        "dedup",
+    ],
+)
+def test_non_convergence_raise_leaves_no_cache(spark, op):
+    """Every fixed-point operator refuses a half-converged answer AND
+    releases every round it persisted on the way out."""
+    spark.catalog.clearCache()
+    ndf = spark.createDataFrame([(i,) for i in range(8)], "node bigint")
+    edf = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "src bigint, dst bigint"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _path_cc(op)(ndf, edf, max_iter=1)
+    assert _cached_rdd_count(spark) == 0, op
+
+
 def test_bench_style_consumption_keeps_cachemanager_flat(spark, sf_dir):
     """Bench/checker consumption contract: count + clearCache after
     each catalog query keeps the CacheManager empty — one entry per
@@ -316,3 +361,35 @@ def test_label_propagation_unreached_nodes_keep_null(spark):
     # 7 and 9 share a cell with each other only (both unlabeled):
     # no labeled component ever reaches them
     assert out[7] is None and out[9] is None
+
+
+def test_label_propagation_zero_norm_vector_raises_typed(spark):
+    """A zero-norm embedding never reaches the seed-sentinel vote
+    arithmetic: the cosine normalization divides by its norm, and
+    Spark's default ANSI mode raises DIVIDE_BY_ZERO in both weight
+    modes, so a seed can never be silently relabeled."""
+    from pyspark.errors import ArithmeticException
+
+    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators import (
+        similarity,
+    )
+
+    embs = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0], "A"),  # zero-norm seed
+            (1, [1.0, 0.0], "B"),
+            (2, [0.9, 0.1], None),
+        ],
+        "vec_id bigint, embedding array<double>, label string",
+    )
+    for fp in (False, True):
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            similarity.label_propagation(
+                embs,
+                k=2,
+                n_cells=1,
+                iterations=2,
+                seed_filter=F.col("label").isNotNull(),
+                seeded_cells=True,
+                fp_weights=fp,
+            ).collect()
