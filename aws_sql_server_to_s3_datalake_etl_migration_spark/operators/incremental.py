@@ -3,15 +3,15 @@
 The reference's machinery (``utils.py:212-246``): read the existing lake
 table, take ``max(primary_key)`` as a high watermark, keep only incoming
 rows above it, then either append or MERGE. Reproduced here Spark-first,
-with the reference's scoping bugs fixed (SURVEY.md §2.11) and a
-parquet-based merge for when delta-spark is absent.
+with the reference's scoping bugs fixed (SURVEY.md §2.11), on the
+package's own Delta-log engine (``sources/delta_log.py``).
 
 Scale notes:
 - The watermark is a single-row aggregate (map-side combined); at 100 TB
   it reads one column, pruned, not the table.
-- ``merge_upsert`` without Delta rewrites the whole target — correct but
-  heavy; on a Delta-enabled cluster ``DeltaTable.merge`` rewrites only
-  matched files. The API keeps both behind one function.
+- ``merge_upsert`` rewrites the whole target in one copy-on-write
+  commit — correct but heavy; a file-granular merge would rewrite only
+  matched files.
 """
 
 from __future__ import annotations
@@ -57,51 +57,13 @@ def merge_upsert(
     (whenMatchedDelete); unmatched delete rows are ignored; the flag
     column itself is never written to the target.
 
-    Uses DeltaTable when available; otherwise an equivalent
-    parquet-level merge: target rows whose pk appears in ``incoming``
-    are replaced by the incoming version (or dropped, for deletes),
-    new pks are inserted. SCD-0 full-row semantics, matching the
-    reference.
+    Target rows whose pk appears in ``incoming`` are replaced by the
+    incoming version (or dropped, for deletes), new pks are inserted.
+    SCD-0 full-row semantics, matching the reference. A log-backed
+    table gets one copy-on-write commit through the log engine; a
+    plain parquet directory (no ``_delta_log``) is rewritten through a
+    staging-dir swap.
     """
-    # Engage the native path only when Delta is BOTH importable and the
-    # target path is a real Delta table; any failure past that point is
-    # a genuine merge error (schema mismatch, concurrent write,
-    # constraint violation) and must surface — silently re-running the
-    # merge through the parquet path would mask it (r6 verdict item 2).
-    target = None
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError:
-        DeltaTable = None  # delta-spark absent: parquet fallback
-    if DeltaTable is not None:
-        try:
-            target = DeltaTable.forPath(spark, path)
-        except Exception:
-            # not a Delta table at this path (plain-parquet lake, or
-            # the jar half-installed) — the only other condition under
-            # which the fallback is the correct degradation
-            target = None
-    if target is not None:
-        m = target.alias("t").merge(
-            incoming.alias("i"),
-            f"t.{primary_key} = i.{primary_key}",
-        )
-        if delete_col is not None:
-            upsert_cols = [c for c in incoming.columns if c != delete_col]
-            m = (
-                m.whenMatchedDelete(condition=f"i.{delete_col}")
-                .whenMatchedUpdate(
-                    set={c: f"i.{c}" for c in upsert_cols}
-                )
-                .whenNotMatchedInsert(
-                    condition=f"NOT i.{delete_col}",
-                    values={c: f"i.{c}" for c in upsert_cols},
-                )
-            )
-        else:
-            m = m.whenMatchedUpdateAll().whenNotMatchedInsertAll()
-        m.execute()
-        return
     from ..sources import delta_log
 
     logged = delta_log.log_version(spark, path) is not None

@@ -17,7 +17,6 @@ from .writers import (
     save_as_table,
 )
 from .local import create_dataframe_from_rows, create_dataframe_from_pandas
-from .lake_table import LakeTable
 
 __all__ = [
     "read_jdbc",
@@ -34,5 +33,4 @@ __all__ = [
     "save_as_table",
     "create_dataframe_from_rows",
     "create_dataframe_from_pandas",
-    "LakeTable",
 ]

@@ -1,14 +1,14 @@
-"""Minimal Delta-protocol transaction-log WRITER for the fallback path.
+"""Delta-protocol transaction-log engine: the package's only Delta
+implementation, written from the public spec
+(https://github.com/delta-io/delta/blob/master/PROTOCOL.md).
 
 The reference appends to Delta tables through delta-spark
-(``utils.py:76-80``) and MERGEs through ``DeltaTable``
-(``utils.py:222-230``). This container cannot install delta-spark, so
-the engine's fallback has so far READ real ``_delta_log`` directories
-(``readers.py _delta_live_files`` replays adds/removes, checkpoints,
-time travel) while WRITES degraded to plain parquet. This module closes
-that gap: fallback writes now produce a real transaction log — the
-newline-delimited-JSON action format from the public Delta protocol
-spec (delta.io PROTOCOL.md) — so fallback-written tables get
+(``utils.py:76-80``) and MERGEs through its table API
+(``utils.py:222-230``). Here every Delta write goes through this
+module and every Delta read through the log replay in
+``readers.py`` (``_delta_live_files`` replays adds/removes,
+checkpoints, time travel). Writes produce a real transaction log —
+the newline-delimited-JSON action format of the spec — so tables get
 
 - **atomic, isolated commits** with OPTIMISTIC CONCURRENCY: a writer
   claims version N by atomically renaming a fully-written temp file to
@@ -32,11 +32,11 @@ Actions carry the full protocol surface the replay reader consumes
 metaData with the Spark-JSON schemaString), and checkpoints are
 SPEC-COMPLETE: the checkpoint parquet holds the latest ``protocol``
 and ``metaData`` actions plus full-field ``add`` rows, and a
-``_last_checkpoint`` pointer file is maintained — so delta-spark
-itself can read these tables when the jar is present, INCLUDING after
-``write_checkpoint`` + ``truncate_log`` (a real Delta reader
-reconstructs snapshots from the ``_last_checkpoint``-discovered
-checkpoint exactly as our fallback replay does).
+``_last_checkpoint`` pointer file is maintained — so any Delta
+reader can read these tables, INCLUDING after ``write_checkpoint`` +
+``truncate_log`` (a Delta reader reconstructs snapshots from the
+``_last_checkpoint``-discovered checkpoint exactly as the replay in
+``readers.py`` does).
 
 Partitioned tables are supported end to end: ``partition_by`` on
 append/overwrite writes Hive-layout data files, carries
@@ -67,8 +67,7 @@ and checkpoints carry the latest txn per appId so the mark survives
 ``truncate_log`` — the primitive the exactly-once streaming sink
 (``streaming.stream_txn_append_to_lake``) is built on. Commits also
 carry a ``commitInfo`` provenance line (operation/timestamp/engine)
-rendered by :func:`table_history` — DESCRIBE HISTORY for the
-fallback path.
+rendered by :func:`table_history` — DESCRIBE HISTORY.
 """
 
 from __future__ import annotations
@@ -710,14 +709,6 @@ def latest_metadata(
     return cp_md
 
 
-def table_schema_json(spark: SparkSession, table_path: str) -> str | None:
-    """schemaString from the latest metaData action (JSON commits
-    first, then spec-complete checkpoints), or None for an un-logged
-    path."""
-    md = latest_metadata(spark, table_path)
-    return md["schemaString"] if md else None
-
-
 def read_commit_text(spark: SparkSession, path: str) -> str:
     """Whole small-file read. Local paths (no scheme, or file:) read
     with plain Python IO — a py4j round trip through the Hadoop FS
@@ -777,23 +768,18 @@ def _check_append_compat(
     widened = None
     expected = md.get("schemaString")
 
-    # compare SHAPES (name/type + nullability narrowing), not raw
-    # JSON: key order is a writer artifact, column-mapping /
-    # generation annotations live in field metadata the incoming
-    # frame legitimately lacks, and a NON-nullable frame column may
-    # always write into a nullable table column (the reverse is the
-    # real violation)
+    # compare SHAPES (name/type), not raw JSON: key order is a writer
+    # artifact, and column-mapping / generation annotations live in
+    # field metadata the incoming frame legitimately lacks.
+    # Nullability is not part of the shape: a nullable frame column
+    # may write into a NOT NULL table column, and
+    # _enforce_check_constraints checks its rows (delta-spark's rule)
     def _shapes_compatible(exp_json: str, act_json: str) -> bool:
         e = json.loads(exp_json)["fields"]
         a = json.loads(act_json)["fields"]
-        if [(f["name"], f["type"]) for f in e] != [
+        return [(f["name"], f["type"]) for f in e] == [
             (f["name"], f["type"]) for f in a
-        ]:
-            return False
-        return all(
-            ef.get("nullable", True) or not af.get("nullable", True)
-            for ef, af in zip(e, a)
-        )
+        ]
 
     if expected is not None and not _shapes_compatible(
         expected, df.schema.json()
@@ -869,40 +855,53 @@ def _enforce_check_constraints(
     df: DataFrame, table_path: str, md: dict | None
 ) -> None:
     """Reject a write carrying rows that violate any of the table's
-    CHECK constraints — Delta writer-protocol semantics: a constraint
-    fails only when its expression evaluates to FALSE (NULL passes,
-    SQL three-valued logic). All constraints are counted in ONE
-    aggregate pass over the batch, so N constraints cost one job, not
-    N."""
+    CHECK constraints or NOT NULL columns — Delta writer-protocol
+    semantics: a CHECK fails only when its expression evaluates to
+    FALSE (NULL passes, SQL three-valued logic); a NOT NULL column
+    fails on any NULL. Only NOT NULL columns the frame carries as
+    nullable need the row check (a non-nullable frame column cannot
+    hold one). All checks are counted in ONE aggregate pass over the
+    batch, so N checks cost one job, not N, and a table with neither
+    kind costs none."""
     from pyspark.sql import functions as F
 
     constraints = table_constraints(md)
-    if not constraints:
+    frame_nullable = {f.name for f in df.schema.fields if f.nullable}
+    not_null = [
+        f["name"]
+        for f in json.loads((md or {}).get("schemaString") or "{}").get(
+            "fields", []
+        )
+        if not f.get("nullable", True) and f["name"] in frame_nullable
+    ]
+    if not constraints and not not_null:
         return
+    violates = [
+        ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
+        for expr in constraints.values()
+    ] + [F.col(f"`{c.replace('`', '``')}`").isNull() for c in not_null]
     counts = df.agg(
         *[
-            F.sum(
-                F.when(
-                    ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias(name)
-            for name, expr in constraints.items()
+            F.sum(F.when(v, F.lit(1)).otherwise(F.lit(0))).alias(f"c{i}")
+            for i, v in enumerate(violates)
         ]
     ).first()
-    broken = {
-        name: (counts[name], constraints[name])
-        for name in constraints
-        if (counts[name] or 0) > 0
-    }
-    if broken:
-        detail = "; ".join(
-            f"{name} CHECK ({expr}): {n} violating row(s)"
-            for name, (n, expr) in broken.items()
+    bad = [n or 0 for n in counts]
+    nulls = [c for c, n in zip(not_null, bad[len(constraints):]) if n]
+    if nulls:
+        raise ValueError(
+            f"write to Delta table {table_path} violates NOT NULL "
+            f"constraint on column(s) {nulls}"
         )
+    broken = [
+        f"{name} CHECK ({expr}): {n} violating row(s)"
+        for (name, expr), n in zip(constraints.items(), bad)
+        if n
+    ]
+    if broken:
         raise ValueError(
             f"write to Delta table {table_path} violates CHECK "
-            f"constraint(s): {detail}"
+            f"constraint(s): {'; '.join(broken)}"
         )
 
 
@@ -2364,7 +2363,7 @@ def table_changes(
     to_version: int | None = None,
 ) -> DataFrame:
     """Change Data Feed from the log alone (delta-spark's
-    ``table_changes``, reconstructed for the fallback engine): every
+    ``table_changes``, reconstructed from the spec): every
     row-level change committed in ``(from_version, to_version]``,
     tagged ``change_type`` ('insert' | 'delete') and
     ``commit_version``. An UPDATE surfaces as delete(old) +
@@ -2665,66 +2664,6 @@ def fsck(spark: SparkSession, table_path: str) -> dict:
             report["errors"].append(f"checkpoint integrity: {e}")
     report["ok"] = not report["errors"]
     return report
-
-
-def read_offset(spark: SparkSession, offset_path: str) -> int:
-    """Last processed table version recorded at ``offset_path``
-    (:func:`commit_offset`), or -1 for a fresh consumer (so the first
-    feed starts at the table's first commit: ``table_changes``'s
-    from-version is exclusive)."""
-    fs, jvm = _fs(spark, offset_path)
-    p = jvm.org.apache.hadoop.fs.Path(offset_path)
-    if not fs.exists(p):
-        return -1
-    return int(json.loads(read_commit_text(spark, offset_path))["version"])
-
-
-def commit_offset(
-    spark: SparkSession, offset_path: str, version: int
-) -> None:
-    """Durably record ``version`` as processed — written to a temp
-    file and atomically renamed over ``offset_path``, so a crashed
-    consumer never sees a torn offset. Call AFTER the feed's effects
-    are durable; crashing before the call replays the same feed on
-    restart (at-least-once, the same replay-safe contract as the
-    streaming ingestion suite — pair with idempotent processors)."""
-    fs, jvm = _fs(spark, offset_path)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    payload = json.dumps(
-        {"version": int(version), "committedAt": int(time.time() * 1000)}
-    ).encode()
-    tmp = f"{offset_path}.tmp-{uuid.uuid4().hex}"
-    _write_bytes(spark, tmp, payload)
-    dest = hpath(offset_path)
-    if fs.exists(dest):
-        fs.delete(dest, False)
-    if not fs.rename(hpath(tmp), dest):
-        raise IOError(f"could not publish consumer offset {offset_path}")
-
-
-def consume_changes(
-    spark: SparkSession, table_path: str, offset_path: str
-):
-    """Incremental CDF consumption with a durable offset — the
-    downstream-pipeline contract the lake engine's Change Data Feed
-    enables: each call returns ``(feed, head)`` where ``feed`` is
-    ``table_changes(offset, head)`` (None when the consumer is caught
-    up) and ``head`` is the version to :func:`commit_offset` once the
-    feed's effects are durable. Per call the consumer pays for the
-    bytes the NEW commits touched — maintenance commits
-    (``dataChange: false``) cost nothing — never for table size or
-    history length. Offsets live wherever the caller points
-    ``offset_path`` (one file per consumer), so independent
-    consumers progress independently, exactly like consumer groups.
-    """
-    base = table_path.rstrip("/")
-    offset = read_offset(spark, offset_path)
-    head = log_version(spark, base)
-    if head is None:
-        raise ValueError(f"{table_path} has no transaction log")
-    if head <= offset:
-        return None, offset
-    return table_changes(spark, base, offset, to_version=head), head
 
 
 def table_history(spark: SparkSession, table_path: str) -> list[dict]:

@@ -591,24 +591,23 @@ def read_delta(
 ) -> DataFrame:
     """Delta lake scan + optional SQL-over-view (S5, ``utils.py:177-192``).
 
-    Without delta-spark on the classpath (this container), the fallback
-    replays ``_delta_log`` itself (``_delta_live_files``) and scans only
-    the files the log records as live — a table that has seen
-    MERGE/DELETE/compaction keeps its semantics instead of resurrecting
-    tombstoned rows. A path with no transaction log at all is read as a
-    plain parquet directory. An empty live set (fully deleted table)
-    raises rather than silently scanning dead files.
+    Replays ``_delta_log`` with the package's own log engine
+    (``_delta_live_files``) and scans only the files the log records
+    as live — a table that has seen MERGE/DELETE/compaction keeps its
+    semantics instead of resurrecting tombstoned rows. A path with no
+    transaction log at all is read as a plain parquet directory. An
+    empty live set (fully deleted table) reads as zero rows under the
+    metaData schema, never as a scan of dead files.
 
-    ``version`` requests time travel (``versionAsOf``): the state as of
-    that commit. The fallback replays the log up to ``version``; a
-    plain parquet dir (no log) cannot time-travel and raises.
+    ``version`` requests time travel (``versionAsOf``): the log is
+    replayed up to that commit; a plain parquet dir (no log) cannot
+    time-travel and raises.
 
     ``partition_filter`` ({column: string_value}) prunes a partitioned
-    table to matching partitions: the fallback drops non-matching
-    files during log replay (no data file of another partition is even
-    listed), the native path applies the equivalent ``WHERE`` and lets
-    Delta's own partition pruning elide them. Empty result after a
-    filter is a normal empty frame, not an error.
+    table to matching partitions: non-matching files are dropped
+    during log replay (no data file of another partition is even
+    listed). Empty result after a filter is a normal empty frame, not
+    an error.
 
     ``timestamp_ms`` requests ``timestampAsOf`` time travel (epoch
     millis): resolved to the latest version whose commit file mtime is
@@ -616,9 +615,9 @@ def read_delta(
     version. Mutually exclusive with ``version``.
 
     ``stats_filter`` ([(column, op, literal)], op in <, <=, >, >=, =)
-    is Delta data skipping from the fallback log's per-file footer
-    stats: files whose min/max bounds prove no row can match are
-    dropped from the scan's FILE LIST (they never appear as inputs),
+    is Delta data skipping from the log's per-file ``add.stats``:
+    files whose min/max bounds prove no row can match are dropped
+    from the scan's FILE LIST (they never appear as inputs),
     and the predicates are ALSO applied as a residual ``WHERE`` so the
     result is exactly scan-then-filter — stats only ever prune, never
     decide. At 100 TB a selective predicate on a clustered/sorted
@@ -655,71 +654,63 @@ def read_delta(
                 (_pm.get(c, c), op, val) for c, op, val in stats_filter
             ]
     filtered_empty = False
-    try:
-        reader = spark.read.format("delta")
+    files = _delta_live_files(
+        spark,
+        path,
+        version=version,
+        partition_filter=partition_filter,
+        stats_filter=stats_filter_phys,
+    )
+    if files is None:
         if version is not None:
-            reader = reader.option("versionAsOf", str(version))
-        df = reader.load(path)
-        for k, v in (partition_filter or {}).items():
-            df = df.where(F.col(k).cast("string") == F.lit(v))
-    except Exception:
-        files = _delta_live_files(
-            spark,
-            path,
-            version=version,
-            partition_filter=partition_filter,
-            stats_filter=stats_filter_phys,
-        )
-        if files is None:
-            if version is not None:
-                raise ValueError(
-                    f"{path} has no _delta_log; cannot time-travel a "
-                    "plain parquet directory"
-                )
-            df = spark.read.parquet(path)
-        elif not files:
-            if partition_filter or stats_filter:
-                # a pruned-to-nothing read is empty, not broken: build
-                # the zero-row frame through the SAME declared-schema
-                # path as a matching read, so column-mapped (renamed /
-                # dropped) and schema-evolved tables keep their LOGICAL
-                # shape — a raw limit(0) scan would leak physical field
-                # names / a stale shape for the empty case only
-                all_files = _delta_live_files(spark, path, version=version)
-                if all_files:
-                    df = _read_live_with_declared_schema(
-                        spark, path, all_files, version
-                    ).limit(0)
-                    filtered_empty = True
-            if not filtered_empty:
-                # a table whose every row was deleted is EMPTY, not
-                # broken — delta-spark returns zero rows with the
-                # metaData schema, and so do we (the schemaString is
-                # always reachable: commit 0 or a spec-complete
-                # checkpoint carries it)
-                from pyspark.sql.types import StructType
-
-                from .delta_log import latest_metadata
-
-                md = latest_metadata(spark, path, version=version)
-                if md is None:
-                    raise ValueError(
-                        f"Delta table at {path} has no live files and "
-                        "no reachable metaData; cannot reconstruct "
-                        "even an empty snapshot"
-                    )
-                df = spark.createDataFrame(
-                    [],
-                    StructType.fromJson(json.loads(md["schemaString"])),
-                )
-                filtered_empty = True
-        else:
-            # basePath keeps Hive-style partition columns visible when
-            # the live files sit under key=value directories; harmless
-            # for unpartitioned layouts
-            df = _read_live_with_declared_schema(
-                spark, path, files, version
+            raise ValueError(
+                f"{path} has no _delta_log; cannot time-travel a "
+                "plain parquet directory"
             )
+        df = spark.read.parquet(path)
+    elif not files:
+        if partition_filter or stats_filter:
+            # a pruned-to-nothing read is empty, not broken: build
+            # the zero-row frame through the SAME declared-schema
+            # path as a matching read, so column-mapped (renamed /
+            # dropped) and schema-evolved tables keep their LOGICAL
+            # shape — a raw limit(0) scan would leak physical field
+            # names / a stale shape for the empty case only
+            all_files = _delta_live_files(spark, path, version=version)
+            if all_files:
+                df = _read_live_with_declared_schema(
+                    spark, path, all_files, version
+                ).limit(0)
+                filtered_empty = True
+        if not filtered_empty:
+            # a table whose every row was deleted is EMPTY, not
+            # broken — delta-spark returns zero rows with the
+            # metaData schema, and so do we (the schemaString is
+            # always reachable: commit 0 or a spec-complete
+            # checkpoint carries it)
+            from pyspark.sql.types import StructType
+
+            from .delta_log import latest_metadata
+
+            md = latest_metadata(spark, path, version=version)
+            if md is None:
+                raise ValueError(
+                    f"Delta table at {path} has no live files and "
+                    "no reachable metaData; cannot reconstruct "
+                    "even an empty snapshot"
+                )
+            df = spark.createDataFrame(
+                [],
+                StructType.fromJson(json.loads(md["schemaString"])),
+            )
+            filtered_empty = True
+    else:
+        # basePath keeps Hive-style partition columns visible when
+        # the live files sit under key=value directories; harmless
+        # for unpartitioned layouts
+        df = _read_live_with_declared_schema(
+            spark, path, files, version
+        )
     if stats_filter and not filtered_empty:
         # residual predicate: skipping only pruned files whose bounds
         # PROVE emptiness — admitted files still carry non-matching

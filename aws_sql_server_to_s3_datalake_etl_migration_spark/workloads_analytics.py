@@ -545,7 +545,7 @@ def merge_upsert_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incoming batch survive, matched rows are replaced by the
     incoming version, unmatched incoming rows are inserted. This is
     exactly what ``operators.incremental.merge_upsert`` executes
-    against parquet when delta-spark is absent."""
+    before its copy-on-write commit."""
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
     o = _t(spark, sf_dir, "orders")
     target = o.where(

@@ -74,11 +74,67 @@ def test_checkpoint_is_spec_complete(spark, tmp_path):
     assert last["size"] == len(adds) + 1  # + the protocol/metaData row
 
 
+def test_nullable_frame_writes_into_not_null_table(spark, tmp_path):
+    """A table bootstrapped from a derived frame has NOT NULL columns.
+    A later MERGE or append of a nullable-typed frame with no NULLs
+    commits (delta-spark's rule: nullability is checked per row, not
+    by schema shape), and the table keeps its NOT NULL columns."""
+    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.incremental import (
+        merge_upsert,
+    )
+
+    path = str(tmp_path / "not_null_ok")
+    write_delta_append(
+        spark.range(5).selectExpr("id AS pk", "id * 2 AS v"), path
+    )
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(1, 100), (7, 14)], "pk long, v long"),
+        path,
+        "pk",
+    )
+    write_delta_append(
+        spark.createDataFrame([(9, 18)], "pk long, v long"), path
+    )
+    got = {(r.pk, r.v) for r in read_delta(spark, path).collect()}
+    assert got == {(0, 0), (1, 100), (2, 4), (3, 6), (4, 8), (7, 14), (9, 18)}
+    fields = json.loads(
+        delta_log.latest_metadata(spark, path)["schemaString"]
+    )["fields"]
+    assert [f["nullable"] for f in fields] == [False, False]
+
+
+def test_null_into_not_null_column_is_refused(spark, tmp_path):
+    """A NULL bound for a NOT NULL column fails the write with a
+    ValueError naming the column, before any commit: append, MERGE
+    and UPDATE all leave the table version unchanged."""
+    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.incremental import (
+        merge_upsert,
+    )
+
+    path = str(tmp_path / "not_null_bad")
+    write_delta_append(
+        spark.range(5).selectExpr("id AS pk", "id * 2 AS v"), path
+    )
+    v0 = delta_log.log_version(spark, path)
+    bad = spark.createDataFrame([(1, None), (8, 16)], "pk long, v long")
+    with pytest.raises(ValueError, match=r"NOT NULL.*'v'"):
+        write_delta_append(bad, path)
+    with pytest.raises(ValueError, match=r"NOT NULL.*'v'"):
+        merge_upsert(spark, bad, path, "pk")
+    with pytest.raises(ValueError, match=r"NOT NULL.*'v'"):
+        delta_log.update_where(
+            spark, path, F.col("pk") == 2, {"v": F.lit(None).cast("long")}
+        )
+    assert delta_log.log_version(spark, path) == v0
+    assert read_delta(spark, path).count() == 5
+
+
 def test_schema_enforcement_survives_truncation(spark, tmp_path):
     """After checkpoint + truncate_log delete every metaData-carrying
     JSON commit, the checkpoint's metaData row keeps schema
-    enforcement (and table_schema_json) alive — the silent-disable
-    the r7 advice flagged."""
+    enforcement (and the latest metaData's schemaString) alive — the
+    silent-disable the r7 advice flagged."""
     path = str(tmp_path / "cp_schema")
     write_delta_append(
         spark.createDataFrame([(1, "a")], "pk long, v string"), path
@@ -86,8 +142,8 @@ def test_schema_enforcement_survives_truncation(spark, tmp_path):
     delta_log.write_checkpoint(spark, path)
     assert delta_log.truncate_log(spark, path) == 1
     assert _log_jsons(path) == []  # no commits left at all
-    got = delta_log.table_schema_json(spark, path)
-    assert got is not None and '"pk"' in got
+    got = delta_log.latest_metadata(spark, path)["schemaString"]
+    assert '"pk"' in got
     bad = spark.createDataFrame([(2, "b", 9)], "pk long, v string, x int")
     with pytest.raises(ValueError, match="schema mismatch"):
         delta_log.append_commit(bad, path)
@@ -955,39 +1011,6 @@ def test_fsck_reports_each_corruption_class(spark, tmp_path):
     assert rep["log_gap"] is not None and not rep["ok"]
 
 
-def test_cdf_consumer_offsets_at_least_once(spark, tmp_path):
-    """Durable-offset CDF consumption: a fresh consumer sees the full
-    history, a caught-up consumer sees None, a crash before
-    commit_offset replays the same feed (at-least-once), and two
-    consumers progress independently."""
-    path = str(tmp_path / "t_consume")
-    off_a = str(tmp_path / "consumer_a.offset")
-    off_b = str(tmp_path / "consumer_b.offset")
-    delta_log.append_commit(
-        spark.range(0, 5).selectExpr("id AS pk").coalesce(1), path
-    )
-    delta_log.append_commit(
-        spark.range(5, 8).selectExpr("id AS pk").coalesce(1), path
-    )
-    feed, head = delta_log.consume_changes(spark, path, off_a)
-    assert head == 1 and feed.count() == 8  # full history, v0+v1
-    # crash before offset commit: same feed again
-    feed2, head2 = delta_log.consume_changes(spark, path, off_a)
-    assert head2 == 1 and feed2.count() == 8
-    delta_log.commit_offset(spark, off_a, head)
-    assert delta_log.consume_changes(spark, path, off_a) == (None, 1)
-    # new commits: only the delta
-    delta_log.delete_where(spark, path, F.col("pk") >= 6)
-    feed3, head3 = delta_log.consume_changes(spark, path, off_a)
-    assert head3 == 2
-    rows = [(r.change_type, r.pk) for r in feed3.collect()]
-    assert sorted(rows) == [("delete", 6), ("delete", 7)]
-    delta_log.commit_offset(spark, off_a, head3)
-    # consumer B is independent and still sees everything
-    feed_b, head_b = delta_log.consume_changes(spark, path, off_b)
-    assert head_b == 2 and feed_b.count() == 10  # 8 inserts + 2 deletes
-
-
 def test_replace_where_atomic_backfill(spark, tmp_path):
     """replaceWhere: delete-matching + insert-replacement in ONE
     commit (no observable gap version); untouched partitions' files
@@ -1806,7 +1829,7 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path):
     )
     # schema + txn marks survive via the multi-part checkpoint
     assert delta_log.latest_txn_versions(spark, path) == {"app": 1}
-    assert delta_log.table_schema_json(spark, path) is not None
+    assert delta_log.latest_metadata(spark, path)["schemaString"]
     # later single-file re-checkpoint replaces the parts cleanly
     delta_log.append_commit(
         spark.range(80, 90).selectExpr("id AS pk"), path
@@ -1973,76 +1996,73 @@ def test_concurrent_merges_both_land_via_retry(spark, tmp_path):
     assert rows == expect
 
 
-def test_lake_table_facade_full_surface(spark, tmp_path):
-    """LakeTable: the DeltaTable-shaped object API delegates every
-    operation to the engine with identical semantics — one end-to-end
-    walk across create/append/update/delete/merge/optimize/clone/
-    rename/history/detail/vacuum/restore/CDF."""
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.sources.lake_table import (
-        LakeTable,
+def test_delta_engine_full_surface(spark, tmp_path):
+    """One end-to-end walk across the log engine's public functions:
+    create/append/update/delete/merge/optimize/constraint/rename/
+    history/detail/clone/vacuum/restore/CDF/fsck on one table."""
+    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.incremental import (
+        merge_upsert,
     )
 
-    path = str(tmp_path / "t_facade")
-    with pytest.raises(ValueError, match="not a Delta table"):
-        LakeTable.forPath(spark, path)
-    t = LakeTable.create(
-        spark, path, "pk LONG, v LONG, p STRING", partition_by=["p"]
-    )
-    assert LakeTable.isDeltaTable(spark, path)
-    t.append(
+    path = str(tmp_path / "t_engine")
+    schema = "pk LONG, v LONG, p STRING"
+    delta_log.create_table(spark, path, schema, partition_by=["p"])
+    assert delta_log.log_version(spark, path) == 0
+    delta_log.append_commit(
         spark.createDataFrame(
-            [(i, 0, "a" if i < 5 else "b") for i in range(10)],
-            "pk LONG, v LONG, p STRING",
-        )
-    )
-    assert t.toDF().count() == 10
-    assert t.toDF(partition_filter={"p": "a"}).count() == 5
-    t.update(F.col("pk") == 1, {"v": F.lit(10)})
-    t.delete(F.col("pk") == 9)
-    t.merge(
-        spark.createDataFrame(
-            [(2, 22, "a"), (100, 1, "b")], "pk LONG, v LONG, p STRING"
+            [(i, 0, "a" if i < 5 else "b") for i in range(10)], schema
         ),
+        path,
+        partition_by=["p"],
+    )
+    assert read_delta(spark, path).count() == 10
+    assert read_delta(spark, path, partition_filter={"p": "a"}).count() == 5
+    delta_log.update_where(spark, path, F.col("pk") == 1, {"v": F.lit(10)})
+    delta_log.delete_where(spark, path, F.col("pk") == 9)
+    merge_upsert(
+        spark,
+        spark.createDataFrame([(2, 22, "a"), (100, 1, "b")], schema),
+        path,
         "pk",
     )
-    rows = {(r.pk, r.v) for r in t.toDF().collect()}
+    rows = {(r.pk, r.v) for r in read_delta(spark, path).collect()}
     assert (1, 10) in rows and (2, 22) in rows and (100, 1) in rows
     assert (9, 0) not in rows
-    pre_restore = t.version()
-    # maintenance + DDL through the facade
-    t.optimize()
-    t.addCheckConstraint("v_nonneg", "v >= 0")
+    pre_restore = delta_log.log_version(spark, path)
+    # maintenance + DDL
+    delta_log.compact(spark, path)
+    delta_log.add_check_constraint(spark, path, "v_nonneg", "v >= 0")
     with pytest.raises(ValueError):
-        t.append(
-            spark.createDataFrame(
-                [(7, -1, "a")], "pk LONG, v LONG, p STRING"
-            )
+        delta_log.append_commit(
+            spark.createDataFrame([(7, -1, "a")], schema),
+            path,
+            partition_by=["p"],
         )
-    t.dropCheckConstraint("v_nonneg")
-    t.renameColumn("v", "val")
-    assert t.toDF().columns == ["pk", "val", "p"]
-    ops = {h["operation"] for h in t.history()}
+    delta_log.drop_check_constraint(spark, path, "v_nonneg")
+    delta_log.rename_column(spark, path, "v", "val")
+    assert read_delta(spark, path).columns == ["pk", "val", "p"]
+    ops = {h["operation"] for h in delta_log.table_history(spark, path)}
     assert {"CREATE TABLE", "UPDATE", "DELETE", "RENAME COLUMN"} <= ops
-    d = t.detail()
+    d = delta_log.table_detail(spark, path)
     assert d["partitionColumns"] == ["p"] and d["numFiles"] >= 1
-    # zero-copy clone through the facade diverges independently
-    c = t.clone(str(tmp_path / "t_facade_clone"))
-    c.delete(F.lit(True))
-    assert c.toDF().count() == 0
-    assert t.toDF().count() > 0
+    # zero-copy clone diverges independently
+    clone = str(tmp_path / "t_engine_clone")
+    delta_log.clone_table(spark, path, clone)
+    delta_log.delete_where(spark, clone, F.lit(True))
+    assert read_delta(spark, clone).count() == 0
+    assert read_delta(spark, path).count() > 0
     # vacuum dry-run reports dead files without touching them
-    dead = t.vacuum(min_age_seconds=0, dry_run=True)
+    dead = delta_log.vacuum(spark, path, min_age_seconds=0, dry_run=True)
     assert dead  # update/delete/optimize tombstoned files
-    assert t.toDF(version=1).count() == 10  # still time-travelable
+    assert read_delta(spark, path, version=1).count() == 10
     # restore + CDF (before the real vacuum: restores reach only as
     # far back as vacuum retention, and the engine enforces it)
-    t.restoreToVersion(pre_restore)
-    changes = t.tableChanges(0, 1)
-    assert changes.count() == 10
-    t.vacuum(min_age_seconds=0)
-    assert t.fsck()["ok"]
+    delta_log.restore_to_version(spark, path, pre_restore)
+    assert delta_log.table_changes(spark, path, 0, to_version=1).count() == 10
+    delta_log.vacuum(spark, path, min_age_seconds=0)
+    assert delta_log.fsck(spark, path)["ok"]
     with pytest.raises(ValueError, match="vacuum"):
-        t.restoreToVersion(1)  # below retention now — loud refusal
+        delta_log.restore_to_version(spark, path, 1)  # below retention
 
 
 def test_table_changes_signed_linear_aggregates(spark, tmp_path):

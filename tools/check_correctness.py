@@ -91,7 +91,11 @@ def main() -> int:
         get_spark,
     )
 
-    spark = get_spark(app_name="check-correctness")
+    # progress bars redraw over the OK/FAIL lines in a shared terminal
+    spark = get_spark(
+        app_name="check-correctness",
+        extra_confs={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duck_connection()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
