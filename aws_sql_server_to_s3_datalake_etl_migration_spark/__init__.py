@@ -16,7 +16,6 @@ idiomatic PySpark library:
 - ``functions``   scalar column helpers (name derivation, path munging).
 - ``plans``       control plane: dependency layering, parallel/serial job
                   runners, operational metastore, reconciliation reports.
-- ``streaming``   Structured Streaming analogs of the incremental loads.
 
 Design rules (SURVEY.md §7): DataFrame/SQL only — Catalyst does pushdown,
 pruning, and join selection; no driver-side collect() on data paths; no

@@ -935,7 +935,6 @@ def dedup_against_index(
     the caller can commit rows and fingerprints in whatever order its
     delivery guarantee requires (see ``incremental_exact_dedup`` for
     the watermark-paired batch shape and
-    ``streaming.ingest.stream_dedup_to_lake`` /
     ``pipelines.robust_ingest_to_lake`` for the replay-safe
     partition-overwrite protocol).
 
@@ -1016,9 +1015,8 @@ def incremental_exact_dedup(
     (high-watermark reader, operators/incremental.py). Under
     at-least-once delivery a crash between this append and the
     caller's own sink write would make the replay reject the batch —
-    rows lost; use the replay-safe committers
-    (``streaming.ingest.stream_dedup_to_lake``,
-    ``pipelines.robust_ingest_to_lake``), which compute via
+    rows lost; use the replay-safe committer
+    (``pipelines.robust_ingest_to_lake``), which computes via
     ``dedup_against_index`` and commit rows + fingerprints as
     deterministic per-batch partition overwrites instead.
     """
@@ -1355,134 +1353,6 @@ def cluster_representatives(
         score_col,
         (F.row_number().over(w) == 1).alias("is_rep"),
     )
-
-
-def span_scrub_against_index(
-    spark,
-    new_docs: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    exclude_subdir: str | None = None,
-):
-    """Admission compute for INCREMENTAL duplicated-span removal — the
-    span-granularity sibling of ``dedup_against_index``: a span
-    occurrence in the batch survives iff its text was never seen in
-    the persisted span index (history) AND it is the batch's first
-    occurrence of that text. With batches processed in corpus order,
-    the surviving spans equal the one-shot ``span_dedup`` result
-    (differential pytest) — history is never re-read beyond the
-    index's fixed-width fingerprints, never re-tokenized.
-
-    Returns ``(cleaned, new_fps)``: ``cleaned`` is one row per batch
-    doc (id, n_spans, n_kept, clean_text); ``new_fps`` is the batch's
-    DISTINCT span fingerprints absent from the index — commit them
-    (idempotently, per batch-id partition) after the cleaned rows are
-    safely written, exactly like the exact-dedup protocol.
-    ``exclude_subdir`` drops the batch's own partition from the pinned
-    index file list so an at-least-once replay recomputes identically.
-
-    Scale shape: one explode (corpus tokens / n rows per batch), one
-    batch-local hash-agg, one anti-join against the index on a
-    fixed-width sha256 fingerprint (narrow index ReadSchema), one
-    reassembly agg. O(batch + matches) per batch.
-    """
-    from ..sources import fs
-
-    if n < 1:
-        raise ValueError("span length n must be >= 1 token")
-    toks = new_docs.select(F.col(id_col), tokens(text_col).alias("_w"))
-    n_spans = F.ceil(F.size("_w") / F.lit(n)).cast("bigint")
-    chunks = F.when(
-        F.size("_w") == 0, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_spans - F.lit(1)),
-            lambda s: F.array_join(
-                F.slice(F.col("_w"), s * F.lit(n) + F.lit(1), F.lit(n)),
-                " ",
-            ),
-        )
-    )
-    exploded = toks.select(
-        F.col(id_col), F.posexplode(chunks).alias("_pos", "_sp")
-    )
-    spans = exploded.withColumn(
-        "_ord", _span_ord(exploded, id_col)
-    ).withColumn("span_fp", F.sha2(F.col("_sp"), 256))
-    canon = spans.groupBy("span_fp").agg(F.min("_ord").alias("_canon"))
-    batch_first = spans.join(canon, "span_fp").where(
-        F.col("_ord") == F.col("_canon")
-    )
-    index_files = fs.list_data_files(spark, index_path)
-    if exclude_subdir:
-        marker = f"/{exclude_subdir.strip('/')}/"
-        index_files = [f for f in index_files if marker not in f]
-    if index_files:
-        index = spark.read.parquet(*index_files).select("span_fp")
-        survivors = batch_first.join(index, "span_fp", "left_anti")
-        new_fps = (
-            spans.select("span_fp")
-            .distinct()
-            .join(index, "span_fp", "left_anti")
-        )
-    else:
-        survivors = batch_first
-        new_fps = spans.select("span_fp").distinct()
-    kept = survivors.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_sp"))),
-                lambda x: x["_sp"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    base = toks.select(F.col(id_col), n_spans.alias("n_spans"))
-    cleaned = base.join(kept, id_col, "left").select(
-        id_col,
-        "n_spans",
-        F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-    )
-    return cleaned, new_fps
-
-
-def incremental_span_scrub(
-    spark,
-    new_docs: DataFrame,
-    index_path: str,
-    batch_id: int | str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """Cross-batch duplicated-span removal with a replay-idempotent
-    index commit: compute admission excluding this batch's own index
-    partition, then overwrite ``<index>/ingest_batch_id=<id>`` with
-    the batch's new span fingerprints. Returns the cleaned docs (the
-    caller persists them BEFORE this function's index commit lands in
-    a lake deployment — see ``pipelines.robust_ingest_to_lake`` for
-    the ordering rationale). A retry after ANY mid-run failure must
-    reuse the SAME ``batch_id``: the admission compute excludes that
-    partition, so the rerun reconstructs the pre-batch index state and
-    recomputes identical cleaned rows; a retry under a fresh id would
-    see the half-committed fingerprints as history and scrub the
-    batch's spans as already-seen."""
-    from ..sources.writers import overwrite_batch_partition
-
-    cleaned, new_fps = span_scrub_against_index(
-        spark, new_docs, index_path,
-        id_col=id_col, text_col=text_col, n=n,
-        exclude_subdir=f"ingest_batch_id={batch_id}",
-    )
-    # both outputs read the index through the pinned pre-append file
-    # list, so executing `cleaned` after this commit (or on replay)
-    # still computes against the pre-batch index state
-    overwrite_batch_partition(new_fps, index_path, batch_id)
-    return cleaned
 
 
 def winnowing_fingerprints(

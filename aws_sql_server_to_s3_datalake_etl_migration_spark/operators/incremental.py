@@ -144,16 +144,22 @@ def write_incremental(
     utils.py:226).
 
     Returns the number of rows written/merged (one count action).
+
+    The table is new only when it has no log and no data files; a
+    table that exists but cannot be read (a torn commit, say) raises
+    the reader's error instead of being bootstrapped over.
     """
-    try:
-        lake = read_delta(spark, path)
-        lake.schema  # force analysis: does the table exist?
-    except Exception:
+    from ..sources import delta_log, fs
+
+    if delta_log.log_version(spark, path) is None and not fs.list_data_files(
+        spark, path
+    ):
         write_delta_append(incoming, path)  # M3 bootstrap
         return incoming.count()
     if updates:
         merge_upsert(spark, incoming, path, primary_key)
         return incoming.count()
+    lake = read_delta(spark, path)
     fresh = new_rows_above_watermark(incoming, lake, primary_key)
     n = fresh.count()
     if n:

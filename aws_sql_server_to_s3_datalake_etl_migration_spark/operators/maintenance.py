@@ -181,46 +181,3 @@ def zorder_layout(
     df = spark.read.parquet(path)
     parts = n_files or df.rdd.getNumPartitions()
     swap_overwrite(zorder_arrange(df, cols, parts, bits=bits), path)
-
-
-def expire_batch_partitions(
-    spark: SparkSession,
-    path: str,
-    keep_last: int,
-    partition_col: str = "ingest_batch_id",
-) -> list[str]:
-    """Retention for batch-partitioned lakes (the
-    ``overwrite_batch_partition`` layout): drop all but the newest
-    ``keep_last`` ``<partition_col>=...`` directories, returning the
-    dropped partition values. Ordering is numeric when every batch id
-    parses as an int (streaming batch ids), lexicographic otherwise
-    (run-id strings — name runs sortably, e.g. date-prefixed).
-
-    Driver-side metadata work only (one listing + one delete per
-    expired partition) — no Spark job, no data read. Typical use:
-    bound a fingerprint-index or quarantine directory that grows one
-    partition per micro-batch. NOTE: expiring fingerprint-index
-    partitions re-opens dedup admission for the content they indexed —
-    retention there is a correctness knob (forget-after-N-batches),
-    not just a cost one.
-    """
-    if keep_last < 0:
-        raise ValueError("keep_last must be >= 0")
-    from ..sources import fs
-
-    prefix = partition_col + "="
-    parts = [
-        d for d in fs.list_subdirs(spark, path) if d.startswith(prefix)
-    ]
-    vals = [d[len(prefix):] for d in parts]
-    try:
-        ordered = sorted(vals, key=int)
-    except ValueError:
-        ordered = sorted(vals)
-    drop = ordered[: max(0, len(ordered) - keep_last)]
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    for v in drop:
-        p = hpath(f"{path.rstrip('/')}/{prefix}{v}")
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
-    return drop

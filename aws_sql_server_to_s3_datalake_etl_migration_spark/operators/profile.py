@@ -78,126 +78,3 @@ def profile_columns(
         "min_value",
         "max_value",
     )
-
-
-# ---------------------------------------------------------------------------
-# Mergeable / incremental profiling
-# ---------------------------------------------------------------------------
-#
-# The one-pass profiler above recomputes from scratch. An append-only
-# lake wants the profile maintained per batch without rescanning
-# history. Counts and min/max are algebraic (sum / min / max of
-# partials); exact COUNT DISTINCT is NOT mergeable, so the incremental
-# path carries an HLL sketch per column instead (hll_union is
-# order-free and additive) — same trade the rollup operator makes
-# (operators/rollup.py). The persisted state is ONE wide row of typed
-# partials (typed min/max merge correctly; formatted strings would
-# compare lexically), folded with each batch and atomically swapped
-# with a ``_last_folded_batch`` sidecar for exactly-once replay.
-
-
-def profile_partial(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """One wide mergeable partial row: per-column nonnull count, HLL
-    distinct sketch, typed min/max, plus the row count."""
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    cols = list(cols) if cols is not None else list(fields)
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("_n")]
-    for c in cols:
-        aggs += [
-            F.count(F.col(c)).cast("bigint").alias(f"_nn_{c}"),
-            F.hll_sketch_agg(F.col(c).cast("string")).alias(f"_hll_{c}"),
-            F.min(F.col(c)).alias(f"_tmi_{c}"),
-            F.max(F.col(c)).alias(f"_tma_{c}"),
-        ]
-    return df.agg(*aggs)
-
-
-def merge_profile_partials(parts: DataFrame, cols: list[str]) -> DataFrame:
-    """Fold any number of wide partial rows into one (order-free)."""
-    aggs = [F.sum("_n").cast("bigint").alias("_n")]
-    for c in cols:
-        aggs += [
-            F.sum(f"_nn_{c}").cast("bigint").alias(f"_nn_{c}"),
-            F.hll_union_agg(f"_hll_{c}").alias(f"_hll_{c}"),
-            F.min(f"_tmi_{c}").alias(f"_tmi_{c}"),
-            F.max(f"_tma_{c}").alias(f"_tma_{c}"),
-        ]
-    return parts.agg(*aggs)
-
-
-def profile_report(wide: DataFrame, schema, cols: list[str]) -> DataFrame:
-    """Long-format report from a wide partial row: (col_name, n_rows,
-    n_nulls, n_distinct_est, min_value, max_value). ``schema`` is the
-    PROFILED table's schema (for deterministic value formatting)."""
-    fields = {f.name: f.dataType for f in schema.fields}
-    proj = [F.col("_n")]
-    for c in cols:
-        proj += [
-            F.col(f"_nn_{c}"),
-            F.hll_sketch_estimate(f"_hll_{c}").alias(f"_nd_{c}"),
-            _fmt(F.col(f"_tmi_{c}"), fields[c]).alias(f"_mi_{c}"),
-            _fmt(F.col(f"_tma_{c}"), fields[c]).alias(f"_ma_{c}"),
-        ]
-    wide = wide.select(*proj)
-    stack_args = ", ".join(
-        f"'{c}', `_nn_{c}`, `_nd_{c}`, `_mi_{c}`, `_ma_{c}`" for c in cols
-    )
-    return wide.select(
-        F.col("_n").alias("n_rows"),
-        F.expr(
-            f"stack({len(cols)}, {stack_args}) AS "
-            "(col_name, _nonnull, n_distinct_est, min_value, max_value)"
-        ),
-    ).select(
-        "col_name",
-        F.col("n_rows").cast("bigint"),
-        (F.col("n_rows") - F.col("_nonnull")).cast("bigint").alias("n_nulls"),
-        F.col("n_distinct_est").cast("bigint"),
-        "min_value",
-        "max_value",
-    )
-
-
-def incremental_profile_refresh(
-    spark,
-    new_batch: DataFrame,
-    profile_path: str,
-    cols: list[str] | None = None,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Fold ``new_batch`` into the persisted wide-partial profile at
-    ``profile_path`` (bootstrap if absent) and atomically swap it.
-    Cost per refresh: O(batch) + a one-row state read — history is
-    never rescanned. With ``batch_id`` (monotonic), replays of an
-    already-folded batch are no-ops (the id rides the swap as a
-    sidecar, same contract as incremental_rollup_refresh). Returns the
-    refreshed wide partial (render with ``profile_report``)."""
-    from ..sources import fs
-    from ..sources.writers import swap_overwrite
-
-    cols = (
-        list(cols)
-        if cols is not None
-        else [f.name for f in new_batch.schema.fields]
-    )
-    if batch_id is not None:
-        last = fs.read_text_file(
-            spark, f"{profile_path.rstrip('/')}/_last_folded_batch"
-        )
-        if last is not None and int(last) >= batch_id:
-            return spark.read.parquet(profile_path)
-    partial = profile_partial(new_batch, cols)
-    if fs.path_exists(spark, profile_path):
-        existing = spark.read.parquet(profile_path)
-        combined = merge_profile_partials(
-            existing.unionByName(partial), cols
-        )
-    else:
-        combined = partial
-    sidecar = (
-        {"_last_folded_batch": str(batch_id)}
-        if batch_id is not None
-        else None
-    )
-    swap_overwrite(combined, profile_path, sidecar=sidecar)
-    return spark.read.parquet(profile_path)

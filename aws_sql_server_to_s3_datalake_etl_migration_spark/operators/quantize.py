@@ -475,7 +475,7 @@ def write_pq_index(
     sidecar. Codes live under per-batch partitions
     (``codes/ingest_batch_id=...``) — the bootstrap owns the
     ``batch_id`` partition (default ``bootstrap``) — so every later
-    append (batch or streaming) is an idempotent per-batch-id
+    append is an idempotent per-batch-id
     overwrite and the layout never mixes plain files with partition
     directories. Pipelines that may REPLAY their bootstrap batch must
     pass the run's own id here (see ``vector_ingest_to_index``): a
@@ -500,39 +500,6 @@ def read_pq_index(spark, path: str):
     cb = spark.read.parquet(f"{path}/codebook")
     row = cb.select("dim", "m").first()
     return codes, cb.select("sub_idx", "code", "cent"), row["dim"], row["m"]
-
-
-def append_to_pq_index(
-    new_vectors: DataFrame,
-    path: str,
-    batch_id: int | str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental index maintenance: encode ONLY the new batch with
-    the index's FROZEN codebook and append its codes — history is
-    never re-read, never re-encoded (the same never-rescan contract as
-    the incremental dedup family). Returns the appended batch's codes.
-
-    Freezing the codebook keeps every historical code valid; the cost
-    is quantization drift if the data distribution moves — measure it
-    with ``pq_index_drift`` and refit + rebuild when it crosses the
-    budget (a full rebuild, amortized over the batches it serves).
-
-    ``batch_id`` names the batch's own partition
-    (``codes/ingest_batch_id=<id>``): a re-run of the same batch
-    overwrites its partition with identical codes (the codebook is
-    frozen), so the append is replay-idempotent rather than
-    duplicate-appending.
-    """
-    from ..sources.writers import overwrite_batch_partition
-
-    spark = new_vectors.sparkSession
-    _, cb, dim, m = read_pq_index(spark, path)
-    enc = pq_encode(new_vectors, cb, id_col=id_col, vec_col=vec_col,
-                    dim=dim, m=m)
-    overwrite_batch_partition(enc, f"{path}/codes", batch_id)
-    return enc
 
 
 def assignment_distortion(

@@ -1,23 +1,17 @@
-"""Continuous-aggregate maintenance: keep a time-bucketed rollup table
-fresh by folding in only newly-arrived events (incremental view
-maintenance for algebraic aggregates — the hypertable
-continuous-aggregate pattern).
+"""Mergeable time-bucketed rollups (the hypertable
+continuous-aggregate state).
 
-COUNT and SUM are additive, so a refresh is: partial-aggregate the new
-batch (O(batch)), union with the existing rollup, and re-aggregate.
-The regroup shuffles O(|rollup| + |batch|) *aggregated* rows — never
-the raw history — so refresh cost is independent of total corpus size.
-Non-additive aggregates (exact COUNT DISTINCT) don't fit this shape;
-use the sketch operators (HLL merges are additive) for those.
+COUNT and SUM are additive, so rollups of disjoint event batches merge
+by union and re-aggregation, shuffling *aggregated* rows, never the
+raw history (``events_rollup_incremental`` proves split-merge equals
+one pass). Non-additive aggregates (exact COUNT DISTINCT) don't fit
+this shape; the HLL sketch and fixed-bin histogram columns do.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..sources import fs
-from ..sources.writers import swap_overwrite
 
 
 def rollup_events(
@@ -59,84 +53,6 @@ def rollup_events(
     ).agg(*aggs)
 
 
-def incremental_rollup_refresh(
-    spark: SparkSession,
-    new_events: DataFrame,
-    rollup_path: str,
-    bucket: str = "hour",
-    ts_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-    distinct_col: str | None = None,
-    histogram: tuple[float, int] | None = None,
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Fold ``new_events`` into the rollup table at ``rollup_path``
-    (bootstrap if absent) and atomically swap it. Returns the refreshed
-    rollup.
-
-    Without ``batch_id``, idempotence is the caller's contract: feed
-    each event batch exactly once (pair with the high-watermark
-    reader, operators/incremental.py, which yields exactly the unseen
-    rows). With ``batch_id`` (monotonically increasing — e.g. the
-    foreachBatch id), folds are exactly-once under at-least-once
-    replay: the id rides the atomic swap as a ``_last_folded_batch``
-    sidecar INSIDE the rollup directory, so data and marker commit in
-    the same rename, and a replay of an already-folded id returns the
-    rollup unchanged instead of double-counting. Single writer per
-    rollup path (which a streaming checkpoint already implies).
-    """
-    if batch_id is not None:
-        last = fs.read_text_file(
-            spark, f"{rollup_path.rstrip('/')}/_last_folded_batch"
-        )
-        if last is not None and int(last) >= batch_id:
-            return spark.read.parquet(rollup_path)
-    partial = rollup_events(
-        new_events, bucket, ts_col, key_cols, value_col, distinct_col,
-        histogram,
-    )
-    if fs.path_exists(spark, rollup_path):
-        existing = spark.read.parquet(rollup_path)
-        aggs = [
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").cast("decimal(38,4)").alias("sum_value"),
-        ]
-        if distinct_col is not None:
-            aggs.append(
-                F.hll_union_agg("distinct_sketch").alias("distinct_sketch")
-            )
-        if histogram is not None:
-            aggs.append(
-                histogram_merge("value_hist", histogram[1]).alias(
-                    "value_hist"
-                )
-            )
-        combined = (
-            existing.unionByName(partial)
-            .groupBy("bucket", *key_cols)
-            .agg(*aggs)
-        )
-    else:
-        combined = partial
-    sidecar = (
-        {"_last_folded_batch": str(batch_id)}
-        if batch_id is not None
-        else None
-    )
-    swap_overwrite(combined, rollup_path, sidecar=sidecar)
-    return spark.read.parquet(rollup_path)
-
-
-def with_distinct_estimate(
-    rollup: DataFrame, out_col: str = "n_distinct_est"
-) -> DataFrame:
-    """Materialize the HLL estimate from a rollup's sketch column."""
-    return rollup.withColumn(
-        out_col, F.hll_sketch_estimate("distinct_sketch")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Mergeable fixed-bin histograms (approximate percentiles that survive
 # incremental refreshes — percentile_approx's internal state is not
@@ -160,18 +76,6 @@ def histogram_agg(value_col: str, bin_width: float, n_bins: int):
             F.sum(F.when(bin_idx == i, 1).otherwise(0)).cast("long")
             for i in range(n_bins)
         ]
-    )
-
-
-def histogram_merge(col: str, n_bins: int):
-    """Aggregate expression merging grouped histogram arrays by
-    element-wise sum — order-insensitive (integer addition commutes),
-    so merged state is exactly the one-pass histogram."""
-    zero = F.array_repeat(F.lit(0).cast("long"), n_bins)
-    return F.aggregate(
-        F.collect_list(col),
-        zero,
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
     )
 
 

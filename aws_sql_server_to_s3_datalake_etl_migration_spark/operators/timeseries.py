@@ -112,77 +112,6 @@ def gapfill_locf(
     return out
 
 
-def locf_chunked(
-    df: DataFrame,
-    value_col: str,
-    key_cols: Sequence[str],
-    order_col: str,
-    chunk: int = 8192,
-    n_rows: int | None = None,
-    target_carry_rows: int = 65536,
-) -> DataFrame:
-    """Last-observation-carried-forward for FEW-KEY GIANT series — the
-    two-pass segment carry SCALING.md prescribes when a per-key
-    ``last(..., ignorenulls)`` window would funnel one enormous series
-    through a single task:
-
-    1. rows bucket into fixed-size chunks by a dense per-key row
-       number; within-chunk LOCF is an ordinary (key, chunk) window —
-       parallel across chunks;
-    2. each chunk's last non-null value (one row per chunk) gets a
-       cross-chunk carry in a tiny per-key window over |chunks| rows;
-    3. the carry joins back (broadcast) and fills rows before their
-       chunk's first observation.
-
-    Result is exactly equal to the single-window LOCF (pinned by a
-    differential pytest). The dense row number itself is one window
-    over the key — cheap because it carries no state — so use this
-    when the VALUE windows dominate, or feed a precomputed
-    ``order_col`` that is already dense per key.
-
-    ``chunk`` is a FLOOR: the effective chunk grows with n so the
-    carry table stays under ``target_carry_rows`` per key-set —
-    a fixed chunk would give an n/chunk-row carry whose per-key
-    single-partition window and join-back broadcast both stop
-    fitting at 10^12-row series. Pass ``n_rows`` (the row count, or
-    any upper bound) to skip the sizing count() job.
-    """
-    from .watermarking import _self_scaling_chunk
-
-    eff_chunk = _self_scaling_chunk(df, chunk, n_rows, target_carry_rows)
-    keys = list(key_cols)
-    w_rn = Window.partitionBy(*keys).orderBy(order_col)
-    d = df.withColumn(
-        "_cid", ((F.row_number().over(w_rn) - 1) / eff_chunk).cast("long")
-    )
-    w_in = (
-        Window.partitionBy(*keys, "_cid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = d.withColumn(
-        "_fill_in", F.last(value_col, ignorenulls=True).over(w_in)
-    )
-    chunk_last = d.groupBy(*keys, "_cid").agg(
-        F.max_by(value_col, F.when(F.col(value_col).isNotNull(),
-                                   F.col(order_col))).alias("_clast")
-    )
-    w_carry = (
-        Window.partitionBy(*keys)
-        .orderBy("_cid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = chunk_last.withColumn(
-        "_carry", F.last("_clast", ignorenulls=True).over(w_carry)
-    ).select(*keys, "_cid", "_carry")
-    # no broadcast hint: the carry is bounded by target_carry_rows, so
-    # AQE broadcasts it while small instead of being forced to
-    d = d.join(carry, [*keys, "_cid"])
-    return d.withColumn(
-        value_col, F.coalesce("_fill_in", "_carry")
-    ).drop("_cid", "_fill_in", "_carry")
-
-
 def interpolate_linear(
     df: DataFrame,
     value_col: str,

@@ -81,43 +81,6 @@ def ingest_query_to_lake(
     return spark.read.parquet(lake_path).count()
 
 
-def corpus_prep_to_lake(
-    spark: SparkSession,
-    docs: DataFrame,
-    lake_path: str,
-    min_quality: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict[str, int]:
-    """Composed training-corpus prep — the LLM-pipeline analog of the
-    reference's table-job template: exact dedup (min-id survivor) →
-    quality filter → deterministic content-hash split → lake write
-    partitioned by split. Returns per-split row counts (from the
-    written table, feeding recon without a re-shuffle).
-
-    Scale shape: one shuffle for the dedup window, pure column work for
-    scoring and splitting, and the write's ``partitionBy("split")``
-    gives downstream training jobs directory-pruned reads of their
-    split. Deterministic end-to-end — same input, same lake, any
-    cluster size.
-    """
-    from .operators.dedup import keep_min_survivors
-    from .operators.sampling import content_split
-    from .operators.textops import with_quality_score
-
-    survivors = keep_min_survivors(docs, [text_col], id_col)
-    kept = with_quality_score(survivors, text_col).where(
-        F.col("quality_score") >= min_quality
-    )
-    staged = kept.withColumn("split", content_split(text_col))
-    write_parquet(staged, lake_path, mode="overwrite", partition_by=["split"])
-    out = spark.read.parquet(lake_path)
-    return {
-        r["split"]: r["n"]
-        for r in out.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-
 def robust_ingest_to_lake(
     spark: SparkSession,
     source_path: str,

@@ -64,10 +64,10 @@ Identifiers): ``append_commit(txn_app_id=, txn_version=)`` skips a
 replayed (app, version) pair against the table's per-app high-water
 mark, pins the commit slot so concurrent replays cannot both land,
 and checkpoints carry the latest txn per appId so the mark survives
-``truncate_log`` — the primitive the exactly-once streaming sink
-(``streaming.stream_txn_append_to_lake``) is built on. Commits also
-carry a ``commitInfo`` provenance line (operation/timestamp/engine)
-rendered by :func:`table_history` — DESCRIBE HISTORY.
+``truncate_log`` — the primitive exactly-once sinks are built on.
+Commits also carry a ``commitInfo`` provenance line
+(operation/timestamp/engine) rendered by :func:`table_history` —
+DESCRIBE HISTORY.
 """
 
 from __future__ import annotations

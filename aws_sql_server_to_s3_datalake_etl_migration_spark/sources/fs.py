@@ -25,11 +25,6 @@ def _is_data_name(name: str) -> bool:
     return not name.startswith(("_", "."))
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_and_path(spark, path)
-    return bool(fs.exists(p))
-
-
 def list_subdirs(spark: SparkSession, path: str) -> list[str]:
     """First-level directory names under ``path`` (sorted), [] if the
     path is absent. Hidden/metadata names (``_``/``.`` prefix) are
@@ -81,7 +76,7 @@ def list_data_files(spark: SparkSession, path: str) -> list[str]:
 def write_bytes_file(spark: SparkSession, path: str, data: bytes) -> None:
     """Write a small driver-side file through the Hadoop FileSystem API
     — same store portability as the listings above. For control-plane
-    files (commit ids, sidecars, metastore records), never bulk data.
+    files (commit ids, metastore records), never bulk data.
 
     The bytes land under a ``_``-prefixed sibling name first and are
     then renamed onto ``path``, so a reader that skips ``_`` names (as
@@ -101,22 +96,3 @@ def write_bytes_file(spark: SparkSession, path: str, data: bytes) -> None:
     if not fs.rename(tmp, p):
         fs.delete(tmp, False)
         raise IOError(f"could not publish {path}")
-
-
-def read_text_file(spark: SparkSession, path: str) -> str | None:
-    """Read a small UTF-8 text file written by ``write_bytes_file``;
-    ``None`` if absent."""
-    fs, p = _fs_and_path(spark, path)
-    if not fs.exists(p):
-        return None
-    inp = fs.open(p)
-    try:
-        # py4j copies byte[] by value, so read through IOUtils (on
-        # Spark's classpath) instead of mutating a Python buffer
-        return str(
-            spark._jvm.org.apache.commons.io.IOUtils.toString(
-                inp, "UTF-8"
-            )
-        )
-    finally:
-        inp.close()

@@ -853,35 +853,6 @@ def read_with_quarantine(
     return df.withColumn("_is_bad", F.col(corrupt_col).isNotNull())
 
 
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str = "",
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Opaque-media ingest: Spark's ``binaryFile`` source over a
-    directory of image/audio/video files — one row per file with
-    ``(path, modificationTime, length, content binary)``. This is the
-    lake-side front door for the multimodal pipeline
-    (operators/multimodal.py consumes the ``content`` column through
-    ``mapInPandas``).
-
-    ``glob`` filters by filename pattern (``pathGlobFilter``, e.g.
-    ``*.jpg``) so non-media sidecars never load; ``max_bytes`` skips
-    files that would blow an Arrow batch (oversized assets route to a
-    dedicated large-object pass instead). Files are unsplittable blobs
-    — parallelism comes from file count, so pair with an object-store
-    layout of many moderate files, not one giant archive.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.where(F.col("length") <= max_bytes)
-    return df
-
-
 def read_table_dir(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Convenience: read one synthetic test table
     (``{sf_dir}/{table}.parquet``)."""

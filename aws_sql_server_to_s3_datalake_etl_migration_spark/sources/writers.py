@@ -46,7 +46,6 @@ def swap_overwrite(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    sidecar: dict[str, str] | None = None,
 ) -> None:
     """Overwrite ``path`` with ``df`` even when ``df`` *reads from*
     ``path`` (merge/compaction rewrites), without materializing the
@@ -63,28 +62,11 @@ def swap_overwrite(
     S3-like object stores rename is copy+delete; the real answer there
     is a table format with a pointer swap (Delta/Iceberg) — this
     helper is the safest plain-directory protocol.
-
-    ``sidecar`` entries are written as small ``_``-prefixed text files
-    INTO the staging directory before the swap, so marker and data
-    commit in the same atomic rename (parquet readers ignore
-    ``_``-prefixed names). Used by the rollup refresh to persist the
-    last-folded batch id together with the fold it belongs to.
     """
-    from . import fs as _fsmod
-
     spark = df.sparkSession
     base = path.rstrip("/")
     staging, old = base + "._staging", base + "._old"
     write_parquet(df, staging, mode="overwrite", partition_by=partition_by)
-    for name, content in (sidecar or {}).items():
-        if not name.startswith("_"):
-            raise ValueError(
-                f"sidecar name {name!r} must start with '_' so parquet "
-                "readers skip it"
-            )
-        _fsmod.write_bytes_file(
-            spark, f"{staging}/{name}", content.encode("utf-8")
-        )
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path
     p_target, p_staging, p_old = (

@@ -580,10 +580,8 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation over the event stream table —
-    the batch twin of ``streaming.windowed_event_counts`` (same
-    expression tree Structured Streaming runs incrementally with a
-    watermark). ``F.window`` buckets rows without a pre-sort; the agg is
+    """Tumbling 1-hour window aggregation over the event stream table.
+    ``F.window`` buckets rows without a pre-sort; the agg is
     map-side combined, so the shuffle carries |windows × types| rows."""
     e = _events(spark, sf_dir)
     return (
@@ -768,8 +766,7 @@ def nation_customer_rosters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inactivity-gap sessionization in batch via ``session_window`` —
-    the batch twin of ``streaming.sessionize`` (applyInPandasWithState)
-    and the one-liner Spark answer to SQL's gaps-and-islands dance (the
+    the one-liner Spark answer to SQL's gaps-and-islands dance (the
     oracle spells it out with LAG + running SUM). One shuffle on
     user_id; sessions assemble inside sorted partitions."""
     e = _events(spark, sf_dir)

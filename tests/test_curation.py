@@ -289,58 +289,6 @@ def test_source_overlap_invariants(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_incremental_profile_matches_full(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    cols = ["o_orderkey", "o_totalprice", "o_orderstatus"]
-    path = str(tmp_path / "profile")
-    # fold three disjoint batches
-    for i in range(3):
-        batch = orders.where(F.col("o_orderkey") % 3 == i)
-        profile.incremental_profile_refresh(
-            spark, batch, path, cols=cols, batch_id=i
-        )
-    wide = spark.read.parquet(path)
-    inc = {
-        r.col_name: r
-        for r in profile.profile_report(
-            wide, orders.schema, cols
-        ).collect()
-    }
-    full = {
-        r.col_name: r for r in profile.profile_columns(orders, cols).collect()
-    }
-    for c in cols:
-        assert inc[c].n_rows == full[c].n_rows
-        assert inc[c].n_nulls == full[c].n_nulls
-        assert inc[c].min_value == full[c].min_value
-        assert inc[c].max_value == full[c].max_value
-        # HLL estimate vs exact distinct
-        assert (
-            abs(inc[c].n_distinct_est - full[c].n_distinct)
-            <= 0.05 * full[c].n_distinct + 2
-        )
-
-
-def test_incremental_profile_replay_noop(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    cols = ["o_orderkey"]
-    path = str(tmp_path / "profile")
-    profile.incremental_profile_refresh(
-        spark, orders, path, cols=cols, batch_id=7
-    )
-    before = profile.profile_report(
-        spark.read.parquet(path), orders.schema, cols
-    ).first()
-    # replay of the same batch id must not double-count
-    profile.incremental_profile_refresh(
-        spark, orders, path, cols=cols, batch_id=7
-    )
-    after = profile.profile_report(
-        spark.read.parquet(path), orders.schema, cols
-    ).first()
-    assert before.n_rows == after.n_rows == orders.count()
-
-
 def test_edit_distance_join_hot_key_cap(spark):
     rows = [(i, s) for i, s in enumerate(_LINK_STRINGS)]
     df = spark.createDataFrame(rows, "id long, s string")
@@ -617,37 +565,6 @@ def test_ivfpq_full_probe_equals_plain_pq(spark):
         r.vec_id for r in similarity.brute_force_topk(embs, q, k=10).collect()
     }
     assert len(part & exact) >= 4
-
-
-def test_pq_index_incremental_append_matches_oneshot(spark, tmp_path):
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators import (
-        quantize,
-    )
-
-    embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    first = embs.where(F.col("vec_id") < 250)
-    second = embs.where(F.col("vec_id") >= 250)
-    cb = quantize.fit_pq_codebook(first, m=8, n_codes=16, iters=1)
-    path = str(tmp_path / "pq_index")
-    quantize.write_pq_index(
-        quantize.pq_encode(first, cb, m=8), cb, path, dim=64, m=8
-    )
-    quantize.append_to_pq_index(second, path, batch_id=1)
-    codes, cb2, dim, m = quantize.read_pq_index(spark, path)
-    assert (dim, m) == (64, 8)
-    # incremental == one-shot encode of the full corpus with the same
-    # frozen codebook, row for row
-    oneshot = quantize.pq_encode(embs, cb, m=8)
-    inc = {r.vec_id: (list(r.pq_codes), r.vec_norm) for r in codes.collect()}
-    ref = {r.vec_id: (list(r.pq_codes), r.vec_norm) for r in oneshot.collect()}
-    assert inc == ref
-    # drift monitor: first call records the baseline, second call on a
-    # same-distribution batch lands near ratio 1
-    r1 = quantize.pq_index_drift(first, path).first()
-    assert r1.drift_ratio is None
-    r2 = quantize.pq_index_drift(second, path).first()
-    assert r2.drift_ratio is not None
-    assert 0.5 < r2.drift_ratio < 2.0
 
 
 def test_validate_embeddings_classifies_and_splits(spark):

@@ -1161,39 +1161,6 @@ def test_hard_negatives_probed_recall_floor(spark):
     assert all(r.label != qlabels[r.query_id] for r in probed)
 
 
-def test_incremental_span_scrub_matches_oneshot_and_replays(
-    spark, sf_dir, tmp_path
-):
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.dedup import (
-        incremental_span_scrub, span_dedup,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    oneshot = {
-        r.doc_id: (r.n_spans, r.n_kept, r.clean_text)
-        for r in span_dedup(docs, n=4).collect()
-    }
-    index = str(tmp_path / "span_index")
-    got = {}
-    for bid, cond in enumerate(["doc_id < 200", "doc_id >= 200"]):
-        out = incremental_span_scrub(
-            spark, docs.where(F.expr(cond)), index, batch_id=bid, n=4
-        )
-        for r in out.collect():
-            got[r.doc_id] = (r.n_spans, r.n_kept, r.clean_text)
-    assert got == oneshot
-    # at-least-once replay of batch 1: same cleaned rows (the index
-    # read excludes the batch's own partition)
-    replay = incremental_span_scrub(
-        spark, docs.where(F.expr("doc_id >= 200")), index, batch_id=1, n=4
-    )
-    rep = {
-        r.doc_id: (r.n_spans, r.n_kept, r.clean_text)
-        for r in replay.collect()
-    }
-    assert rep == {k: v for k, v in got.items() if k >= 200}
-
-
 def test_interval_overlap_join_matches_theta_join(spark):
     from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.temporal import (
         interval_overlap_join,

@@ -101,31 +101,6 @@ def test_partitioned_ingest_prunes_at_listing_time(spark, sf_dir, tmp_path):
     assert pruned.count() == expected
 
 
-def test_corpus_prep_to_lake_end_to_end(spark, tmp_path, sf_dir):
-    import glob
-
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.pipelines import (
-        corpus_prep_to_lake,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lake = str(tmp_path / "corpus")
-    counts = corpus_prep_to_lake(spark, docs, lake, min_quality=0.2)
-    out = spark.read.parquet(lake)
-    # dedup: no duplicate texts survive
-    assert out.count() == out.select("text").distinct().count()
-    # quality floor honored
-    assert out.where("quality_score < 0.2").count() == 0
-    # split directories exist (partitioned write -> directory pruning)
-    assert {s.split("=")[-1].rstrip("/") for s in (
-        p.rsplit("/", 1)[-1] for p in glob.glob(f"{lake}/split=*")
-    )} <= {"train", "val", "test"}
-    assert counts.get("train", 0) > counts.get("val", 0)
-    # deterministic: a second run lands identical per-split counts
-    lake2 = str(tmp_path / "corpus2")
-    assert corpus_prep_to_lake(spark, docs, lake2, min_quality=0.2) == counts
-
-
 def test_robust_ingest_pipeline_end_to_end(spark, tmp_path):
     """Quarantine -> cross-batch dedup -> observed append, composed:
     malformed rows dead-letter, replayed content is rejected by the

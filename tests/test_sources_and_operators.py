@@ -503,6 +503,14 @@ def test_read_delta_fallback_rejects_torn_log(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="torn or corrupt"):
         read_delta(spark, str(path)).count()
+    # an incremental write must surface the same error, not take the
+    # unreadable table for a new one and append over it
+    for updates in (False, True):
+        with _pytest.raises(ValueError, match="torn or corrupt"):
+            write_incremental(
+                spark, spark.range(10, 12), str(path), "id", updates
+            )
+    assert not (log / f"{2:020d}.json").exists()
 
     # version gap: commit 1 missing entirely, commit 2 present
     (log / f"{1:020d}.json").unlink()
@@ -560,46 +568,6 @@ def test_json_and_orc_roundtrip(spark, tmp_path, sf_dir):
               "GROUP BY n_regionkey",
     )
     assert agg.count() == 5
-
-
-def test_read_binary_dir_feeds_multimodal_pipeline(spark, tmp_path):
-    """binaryFile ingest: glob filters sidecars, max_bytes skips
-    oversized assets, and the (path, length, content) rows wire
-    straight into the multimodal feature extractor."""
-    import hashlib
-
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.multimodal import (
-        extract_features,
-    )
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.sources.readers import (
-        read_binary_dir,
-    )
-
-    media = tmp_path / "media"
-    media.mkdir()
-    payloads = {"a.png": b"\x89PNG-a" * 10, "b.png": b"\x89PNG-b" * 20}
-    for name, blob in payloads.items():
-        (media / name).write_bytes(blob)
-    (media / "big.png").write_bytes(b"x" * 10_000)   # over max_bytes
-    (media / "notes.txt").write_bytes(b"sidecar")    # filtered by glob
-
-    df = read_binary_dir(spark, str(media), glob="*.png", max_bytes=1_000)
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.png", "b.png"}
-    assert rows["a.png"]["length"] == len(payloads["a.png"])
-    assert bytes(rows["b.png"]["content"]) == payloads["b.png"]
-
-    assets = df.select(
-        F.abs(F.hash("path")).cast("long").alias("asset_id"),
-        F.lit("image").alias("modality"),
-        F.col("content"),
-    )
-    feats = {
-        r["content_sha256"] for r in extract_features(assets).collect()
-    }
-    assert feats == {
-        hashlib.sha256(b).hexdigest() for b in payloads.values()
-    }
 
 
 def test_quarantine_ingest_routes_corrupt_records(spark, tmp_path):
@@ -757,6 +725,30 @@ def test_cdc_apply_changes_latest_sequence_wins(spark):
     }
     assert got == {1: "a3", 3: "c", 4: "d"}
 
+    # a feed applied batch by batch, in sequence order, lands the same
+    # table as one apply over the whole feed (delete then re-insert
+    # across batches included)
+    ddl = "id long, v string, seq long, op string"
+    feed = [
+        [(1, "a", 1, "I"), (2, "b", 1, "I"), (3, "c", 1, "I")],
+        [(1, "a2", 2, "U"), (2, None, 2, "D"), (4, "d", 2, "I")],
+        [(4, None, 3, "D"), (2, "b2", 3, "I"), (1, "a3", 3, "U")],
+    ]
+    empty = spark.createDataFrame([], "id long, v string")
+    folded = empty
+    for rows in feed:
+        folded = cdc_apply_changes(
+            folded, spark.createDataFrame(rows, ddl), key_col="id"
+        )
+    oneshot = cdc_apply_changes(
+        empty, spark.createDataFrame(sum(feed, []), ddl), key_col="id"
+    )
+    assert (
+        {tuple(r) for r in folded.collect()}
+        == {tuple(r) for r in oneshot.collect()}
+        == {(1, "a3"), (2, "b2"), (3, "c")}
+    )
+
     # feed missing a snapshot column fails loudly
     bad = spark.createDataFrame([(1, 1, "U")], "id long, seq long, op string")
     try:
@@ -766,15 +758,11 @@ def test_cdc_apply_changes_latest_sequence_wins(spark):
         assert "lacks snapshot columns" in str(ex)
 
 
-def test_overwrite_batch_partition_validation_and_sidecar_guard(
-    spark, tmp_path
-):
-    """Writer guardrails: batch ids must be directory-safe, partition
-    columns must not be hidden names, and swap sidecars must be
-    '_'-prefixed so parquet readers skip them."""
+def test_overwrite_batch_partition_validation(spark, tmp_path):
+    """Writer guardrails: batch ids must be directory-safe and
+    partition columns must not be hidden names."""
     from aws_sql_server_to_s3_datalake_etl_migration_spark.sources.writers import (
         overwrite_batch_partition,
-        swap_overwrite,
     )
 
     df = spark.createDataFrame([(1,)], "v long")
@@ -790,18 +778,9 @@ def test_overwrite_batch_partition_validation_and_sidecar_guard(
         assert False
     except ValueError:
         pass
-    try:
-        swap_overwrite(df, base, sidecar={"not_hidden": "1"})
-        assert False
-    except ValueError:
-        pass
-    # the valid forms work and read back with lineage
+    # the valid form works and reads back with lineage
     overwrite_batch_partition(df, base, "run-1.a")
-    swap_overwrite(df, str(tmp_path / "s"), sidecar={"_m": "7"})
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.sources import fs
-
     assert spark.read.parquet(base).collect()[0]["ingest_batch_id"] == "run-1.a"
-    assert fs.read_text_file(spark, str(tmp_path / "s") + "/_m") == "7"
 
 
 def test_incremental_join_view_matches_full_recompute(spark, tmp_path):

@@ -307,42 +307,6 @@ def test_lateness_profile_suggests_smallest_safe_delay(spark):
     assert row2["suggested_delay"] == "15 minutes"
 
 
-def test_locf_chunked_equals_single_window(spark):
-    """Chunked LOCF (two-pass segment carry) must equal the plain
-    single-window last(ignorenulls) for every row, including nulls
-    spanning multiple whole chunks and all-null leading chunks."""
-    from pyspark.sql.window import Window
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.timeseries import (
-        locf_chunked,
-    )
-
-    rng = random.Random(13)
-    rows = []
-    for k in ("a", "b"):
-        for i in range(300):
-            # long null runs: ~80% nulls, so gaps straddle chunk bounds
-            v = float(rng.randrange(100)) if rng.random() < 0.2 else None
-            rows.append((k, i, v))
-    df = spark.createDataFrame(rows, "k string, i long, v double")
-
-    w = (
-        Window.partitionBy("k")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    expected = {
-        (r["k"], r["i"]): r["exp"]
-        for r in df.withColumn(
-            "exp", F.last("v", ignorenulls=True).over(w)
-        ).collect()
-    }
-    got = {
-        (r["k"], r["i"]): r["v"]
-        for r in locf_chunked(df, "v", ["k"], "i", chunk=32).collect()
-    }
-    assert got == expected
-
-
 def test_gapfill_quarter_hour_grid(spark):
     """The 15-minute step snaps buckets to the quarter hour and fills
     the sub-hour grid."""
@@ -444,10 +408,6 @@ def test_chunk_carry_self_scales_with_target_carry_rows(spark):
     target_carry_rows — results identical to the fixed-chunk (and
     plain-window) computation at every geometry, including the
     degenerate single-chunk case a huge n would force."""
-    from pyspark.sql.window import Window
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.timeseries import (
-        locf_chunked,
-    )
     from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.watermarking import (
         _self_scaling_chunk,
         with_lateness,
@@ -461,33 +421,6 @@ def test_chunk_carry_self_scales_with_target_carry_rows(spark):
     assert _self_scaling_chunk(tiny, 4, 100, 8) == 13  # ceil(100/8)
 
     rng = random.Random(7)
-    rows = []
-    for k in ("a", "b"):
-        for i in range(200):
-            v = float(rng.randrange(50)) if rng.random() < 0.25 else None
-            rows.append((k, i, v))
-    df = spark.createDataFrame(rows, "k string, i long, v double")
-    w = (
-        Window.partitionBy("k")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    expected = {
-        (r["k"], r["i"]): r["exp"]
-        for r in df.withColumn(
-            "exp", F.last("v", ignorenulls=True).over(w)
-        ).collect()
-    }
-    for chunk, target in [(16, 10), (16, 10**6), (1, 1)]:
-        got = {
-            (r["k"], r["i"]): r["v"]
-            for r in locf_chunked(
-                df, "v", ["k"], "i",
-                chunk=chunk, target_carry_rows=target,
-            ).collect()
-        }
-        assert got == expected, (chunk, target)
-
     # lateness: tiny target forces few big chunks; same answers
     ts = []
     t = 0

@@ -1662,7 +1662,7 @@ def audit(name: str, show: bool = False) -> list[str]:
         )
     # Row-at-a-time Python UDFs are never sanctioned anywhere in this
     # engine — Arrow-batched nodes are allowed only where pure_jvm is
-    # not pinned (multimodal, streaming sessionize).
+    # not pinned (multimodal).
     if "BatchEvalPython" in plan:
         problems.append("BatchEvalPython (row-at-a-time Python UDF)")
     return problems
