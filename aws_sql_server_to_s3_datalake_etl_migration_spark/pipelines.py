@@ -11,7 +11,9 @@ The reference ships each pipeline as a standalone Glue script:
 
 Here they are callables registered with the in-process ``JobRunner``
 (plans/runner.py) instead of Glue jobs; each returns the row count it
-wrote so the recon layer (plans/recon.py) is fed without re-scanning.
+wrote, observed during the write itself. That count is the job's own
+report only: the recon layer (plans/recon.py) never takes it, and
+re-reads what landed in the lake, so a lost or extra row still shows.
 """
 
 from __future__ import annotations
@@ -23,10 +25,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.clean import sanitize_columns
+from .operators.quality import observed_write
 from .sources.readers import read_csv
 from .sources.writers import write_parquet
 
 _VIEWS_LOCK = threading.Lock()
+
+
+def _write_counted(
+    df: DataFrame, lake_path: str, partition_by: list[str] | None
+) -> int:
+    """Parquet overwrite that returns the rows it wrote, counted by an
+    ``Observation`` during the write job: no second job, no re-read."""
+    return observed_write(
+        df,
+        lambda d: write_parquet(
+            d, lake_path, mode="overwrite", partition_by=partition_by
+        ),
+        metrics={"n": F.count(F.lit(1))},
+    )["n"]
 
 
 def ingest_csv_to_lake(
@@ -40,12 +57,12 @@ def ingest_csv_to_lake(
     DDL-typed, S6/S7) → header sanitization (P4) → parquet overwrite
     (S9). Returns rows written.
 
-    The count reuses the written parquet, not the CSV plan: one extra
-    cheap scan beats re-running schema inference twice over raw CSV.
+    The count is observed on the written frame during the write, so
+    neither the CSV nor the landed parquet is scanned a second time;
+    with a DDL the whole ingest is one Spark job.
     """
     df = sanitize_columns(read_csv(spark, csv_path, ddl=ddl))
-    write_parquet(df, lake_path, mode="overwrite", partition_by=partition_by)
-    return spark.read.parquet(lake_path).count()
+    return _write_counted(df, lake_path, partition_by)
 
 
 def ingest_query_to_lake(
@@ -57,7 +74,8 @@ def ingest_query_to_lake(
 ) -> int:
     """The nis_policies template (table_jobs/nis_policies.py:13-42):
     register each source DataFrame as a temp view, run the SQL, write
-    parquet, drop the views, return rows written.
+    parquet, drop the views, return rows written (observed during the
+    write, as in ``ingest_csv_to_lake``).
 
     ``sources`` maps view name → DataFrame (the reference hard-wired two
     JDBC reads; any reader output works here).
@@ -77,8 +95,7 @@ def ingest_query_to_lake(
         finally:
             for view in sources:
                 spark.catalog.dropTempView(view)
-    write_parquet(out, lake_path, mode="overwrite", partition_by=partition_by)
-    return spark.read.parquet(lake_path).count()
+    return _write_counted(out, lake_path, partition_by)
 
 
 def robust_ingest_to_lake(
@@ -129,7 +146,6 @@ def robust_ingest_to_lake(
     recon numbers, all from work the pipeline already did.
     """
     from .operators.dedup import dedup_against_index
-    from .operators.quality import observed_write
     from .sources.readers import read_with_quarantine
     from .sources.writers import overwrite_batch_partition
 

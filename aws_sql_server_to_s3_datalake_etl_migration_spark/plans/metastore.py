@@ -10,7 +10,8 @@ a unique file name per record, so concurrent ``record`` calls need no
 lock (a Spark append per record would share the Hadoop committer's
 ``_temporary/0`` staging dir, where one commit's cleanup deletes
 another's in-flight files). ``read`` takes the whole directory,
-including files an older Spark-append version of this class wrote.
+including files an older Spark-append version of this class wrote; a
+metastore with no records yet reads as an empty table.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..sources.fs import write_bytes_file
+from ..sources.fs import exists, write_bytes_file
 
 METADATA_SCHEMA = StructType(
     [
@@ -89,6 +90,8 @@ class OperationalMetastore:
         )
 
     def read(self) -> DataFrame:
+        if not exists(self.spark, self.path):  # no record written yet
+            return self.spark.createDataFrame([], METADATA_SCHEMA)
         return self.spark.read.schema(METADATA_SCHEMA).parquet(self.path)
 
     def last_success_durations(self) -> DataFrame:

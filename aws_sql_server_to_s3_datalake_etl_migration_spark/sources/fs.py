@@ -21,6 +21,20 @@ def _fs_and_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
+def exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs_and_path(spark, path)
+    return fs.exists(p)
+
+
+def qualified_path(spark: SparkSession, path: str) -> str:
+    """The decoded path part of ``path`` qualified on its filesystem
+    (``file:///a/b`` and ``/a/b`` both give ``/a/b``): the form to match
+    the file URIs Spark reports, such as ``_metadata.file_path``,
+    against once they are unquoted."""
+    fs, p = _fs_and_path(spark, path)
+    return fs.makeQualified(p).toUri().getPath()
+
+
 def _is_data_name(name: str) -> bool:
     return not name.startswith(("_", "."))
 

@@ -34,8 +34,8 @@ def test_ingest_csv_with_ddl_schema(spark, tmp_path):
     lake = str(tmp_path / "cal_tbl")
     ddl = "CREATE TABLE lookup_calendar (d DATE, label STRING, n INT)"
     n = ingest_csv_to_lake(spark, str(csv), lake, ddl=ddl)
-    assert n == 2
     out = spark.read.parquet(lake)
+    assert n == 2 == out.count()
     assert [f.dataType.simpleString() for f in out.schema.fields] == [
         "date",
         "string",
@@ -336,3 +336,71 @@ def test_ingest_query_to_lake_concurrent_same_view_name(spark, tmp_path):
         assert got == sizes, f"repetition {rep}"
         for name, n in sizes.items():
             assert spark.read.parquet(str(tmp_path / f"{name}_{rep}")).count() == n
+
+
+def test_ingest_counts_are_per_job_under_concurrency(spark, tmp_path):
+    # each job's Observation reports its own write, not a neighbour's
+    from concurrent.futures import ThreadPoolExecutor
+
+    sizes = {"t0": 10, "t1": 200, "t2": 3000, "t3": 0}
+    go = threading.Barrier(len(sizes))
+
+    def job(name):
+        src = spark.range(sizes[name])
+        go.wait(timeout=30)
+        return ingest_query_to_lake(
+            spark, {name: src}, f"SELECT * FROM {name}",
+            str(tmp_path / name),
+        )
+
+    with ThreadPoolExecutor(len(sizes)) as pool:
+        got = dict(zip(sizes, pool.map(job, sizes)))
+    assert got == sizes
+    for name, n in sizes.items():
+        assert spark.read.parquet(str(tmp_path / name)).count() == n
+
+
+def test_ingest_query_filtered_to_zero_rows(spark, tmp_path):
+    from concurrent.futures import ThreadPoolExecutor
+
+    # a literal-false filter is optimized to an empty relation; the
+    # observed count must still arrive instead of blocking
+    queries = ["SELECT * FROM src WHERE 1 = 0", "SELECT * FROM src WHERE id < 0"]
+    with ThreadPoolExecutor(1) as pool:
+        for i, q in enumerate(queries):
+            fut = pool.submit(
+                ingest_query_to_lake,
+                spark, {"src": spark.range(100)}, q, str(tmp_path / f"z{i}"),
+            )
+            assert fut.result(timeout=120) == 0
+            assert spark.read.parquet(str(tmp_path / f"z{i}")).count() == 0
+
+
+def test_ingest_partitioned_returns_total_rows(spark, tmp_path):
+    lake = str(tmp_path / "part_tbl")
+    src = spark.range(1000).withColumn("k", F.col("id") % 7)
+    n = ingest_query_to_lake(
+        spark, {"src": src}, "SELECT * FROM src", lake, partition_by=["k"]
+    )
+    assert n == 1000 == spark.read.parquet(lake).count()
+    assert len(list((tmp_path / "part_tbl").glob("k=*"))) == 7
+
+
+def test_unpartitioned_ingest_runs_only_its_write(spark, tmp_path, count_jobs):
+    # the count rides on the write job: no re-read of the landed table
+    spark.range(500).write.parquet(str(tmp_path / "src"))
+    src = spark.read.schema("id BIGINT").parquet(str(tmp_path / "src"))
+    n, jobs = count_jobs(
+        lambda: ingest_query_to_lake(
+            spark, {"src": src}, "SELECT * FROM src", str(tmp_path / "out")
+        )
+    )
+    assert (n, jobs) == (500, 1)
+    csv = tmp_path / "in.csv"
+    csv.write_text("a\n1\n2\n3\n")
+    n, jobs = count_jobs(
+        lambda: ingest_csv_to_lake(
+            spark, str(csv), str(tmp_path / "csv_out"), ddl="a INT"
+        )
+    )
+    assert (n, jobs) == (3, 1)

@@ -7,7 +7,10 @@ import threading
 import time
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from aws_sql_server_to_s3_datalake_etl_migration_spark.plans import (
     METADATA_SCHEMA,
@@ -19,6 +22,7 @@ from aws_sql_server_to_s3_datalake_etl_migration_spark.plans import (
 )
 from aws_sql_server_to_s3_datalake_etl_migration_spark.plans.recon import (
     assert_reconciled,
+    count_reconciliation,
 )
 
 
@@ -328,3 +332,156 @@ def test_assert_reconciled_raises(spark):
     )
     with pytest.raises(AssertionError, match="unreconciled"):
         assert_reconciled(bad)
+
+
+def _land(spark, lake, sizes: dict) -> dict:
+    """Write one ``range(n)`` table per entry under ``lake``; returns
+    the source frames by table name."""
+    srcs = {}
+    for t, n in sizes.items():
+        srcs[t] = spark.range(n).withColumn("k", F.col("id") % 3)
+        srcs[t].write.parquet(str(lake / t))
+    return srcs
+
+
+def _root(lake, uri: bool) -> str:
+    return f"file://{lake}" if uri else str(lake)
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file-uri"])
+def test_recon_flags_a_deleted_lake_row(spark, tmp_path, uri):
+    lake = tmp_path / "lake"
+    src = _land(spark, lake, {"a_x": 40, "a_y": 25})
+    assert_reconciled(recon_report(spark, _root(lake, uri), src.get))
+    # lose one landed row of a_y behind the writer's back
+    landed = pq.read_table(lake / "a_y")
+    for f in (lake / "a_y").iterdir():
+        f.unlink()
+    pq.write_table(landed.slice(1), lake / "a_y" / "part-0.parquet")
+    report = recon_report(spark, _root(lake, uri), src.get)
+    rows = {r.TableName: r for r in report.collect()}
+    assert (rows["a_y"].OnpremRowCounts, rows["a_y"].TableRowCounts) == (25, 24)
+    assert rows["a_x"].TableRowCounts == 40
+    with pytest.raises(AssertionError, match="a_y"):
+        assert_reconciled(report)
+
+
+def test_recon_skips_raising_source_and_nulls_none_source(spark, tmp_path):
+    lake = tmp_path / "lake"
+    src = _land(spark, lake, {"s_ok": 10, "s_bad": 5, "s_none": 7})
+
+    def reader(t):
+        if t == "s_bad":
+            raise RuntimeError("source unreachable")
+        return src[t] if t == "s_ok" else None
+
+    counts = {
+        r.TableName: r
+        for r in count_reconciliation(spark, str(lake), reader).collect()
+    }
+    assert set(counts) == {"s_ok", "s_none"}
+    assert counts["s_ok"].OnpremRowCounts == counts["s_ok"].TableRowCounts == 10
+    assert counts["s_none"].OnpremRowCounts is None
+    assert counts["s_none"].TableRowCounts == 7
+    report = recon_report(spark, str(lake), reader)
+    rows = {r.TableName: r for r in report.collect()}
+    # the skipped table keeps its size row (full outer), with no counts
+    assert rows["s_bad"].TableRowCounts is None and rows["s_bad"].TableSize > 0
+    assert_reconciled(report)
+
+
+def test_recon_source_failing_at_run_time_is_skipped(spark, tmp_path):
+    # the plan builds, the batched count job fails; each source is then
+    # counted alone and only the failing one is dropped
+    lake = tmp_path / "lake"
+    src = _land(spark, lake, {"f_ok": 10, "f_boom": 4})
+    boom = spark.range(4).where(F.assert_true(F.col("id") < 0).isNull())
+    counts = count_reconciliation(
+        spark, str(lake), lambda t: boom if t == "f_boom" else src[t]
+    ).collect()
+    assert [(r.TableName, r.OnpremRowCounts, r.TableRowCounts) for r in counts] == [
+        ("f_ok", 10, 10)
+    ]
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file-uri"])
+def test_recon_lake_counts_match_parquet_reader(spark, tmp_path, uri):
+    lake = tmp_path / "lake"
+    df = spark.range(300).withColumn("k", F.col("id") % 4)
+    df.write.partitionBy("k").parquet(str(lake / "h_part"))
+    df.write.parquet(str(lake / "h_meta"))
+    df.write.parquet(str(lake / "h sp"))  # URI-escaped in file paths
+    # metadata a table dir can hold besides data: the committer's
+    # _SUCCESS (written above), checksums, and a Delta log with a
+    # parquet checkpoint
+    meta = lake / "h_meta"
+    assert (meta / "_SUCCESS").exists()
+    (meta / ".part-x.parquet.crc").write_bytes(b"crc")
+    (meta / "_delta_log").mkdir()
+    (meta / "_delta_log" / "00000000000000000000.json").write_text("{}\n")
+    pq.write_table(
+        pa.table({"id": list(range(5))}),
+        meta / "_delta_log" / "00000000000000000010.checkpoint.parquet",
+    )
+    expected = {
+        t: spark.read.parquet(str(lake / t)).count()
+        for t in ("h_part", "h_meta", "h sp")
+    }
+    got = {
+        r.TableName: r.TableRowCounts
+        for r in count_reconciliation(
+            spark, _root(lake, uri), lambda t: None
+        ).collect()
+    }
+    assert got == expected == {"h_part": 300, "h_meta": 300, "h sp": 300}
+
+
+def test_recon_empty_table_dir_counts_zero(spark, tmp_path):
+    lake = tmp_path / "lake"
+    src = _land(spark, lake, {"e_full": 12})
+    (lake / "e_marker").mkdir()
+    (lake / "e_marker" / "_SUCCESS").write_bytes(b"")
+    (lake / "e_bare").mkdir()
+    srcs = {**src, "e_marker": spark.range(3), "e_bare": spark.range(0)}
+    report = recon_report(spark, str(lake), srcs.get)
+    rows = {r.TableName: (r.OnpremRowCounts, r.TableRowCounts) for r in report.collect()}
+    assert rows == {"e_full": (12, 12), "e_marker": (3, 0), "e_bare": (0, 0)}
+    with pytest.raises(AssertionError, match="e_marker"):
+        assert_reconciled(report)
+
+
+def test_recon_with_fresh_metastore(spark, tmp_path):
+    meta = OperationalMetastore(spark, str(tmp_path / "no_records_yet"))
+    empty = meta.read()
+    assert empty.schema == METADATA_SCHEMA and empty.count() == 0
+    assert meta.last_success_durations().collect() == []
+    lake = tmp_path / "lake"
+    src = _land(spark, lake, {"m_t": 5})
+    report = recon_report(spark, str(lake), src.get, metastore=meta)
+    (row,) = report.collect()
+    assert (row.TableName, row.TableRowCounts, row.IngestionTime) == ("m_t", 5, None)
+    assert_reconciled(report)
+
+
+def test_recon_job_budget_is_independent_of_table_count(
+    spark, tmp_path, count_jobs
+):
+    jobs = {}
+    for n in (2, 6):
+        lake = tmp_path / f"lake{n}"
+        for i in range(n):
+            spark.range(10 * (i + 1)).write.parquet(str(lake / f"j_{i}"))
+
+        def reader(t, lake=lake):  # explicit schema: no inference job
+            return spark.read.schema("id BIGINT").parquet(str(lake / t))
+
+        counts, jobs[n] = count_jobs(
+            lambda: count_reconciliation(spark, str(lake), reader).collect()
+        )
+        assert {r.TableName: r.TableRowCounts for r in counts} == {
+            f"j_{i}": 10 * (i + 1) for i in range(n)
+        }
+        report = recon_report(spark, str(lake), reader)
+        _, assert_jobs = count_jobs(lambda: assert_reconciled(report))
+        assert assert_jobs == 0
+    assert jobs[2] == jobs[6] <= 4
